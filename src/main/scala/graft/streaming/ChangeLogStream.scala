@@ -85,11 +85,21 @@ final class ChangeLogBuffer {
     if (events.isEmpty) 0L else events.head.eventId - 1
   }
 
-  /** Half-open (min, max] slice, optionally filtered to table set. */
+  /** Half-open (min, max] slice, optionally filtered to table set, in
+    * O(log n + k) for k events in the range: a binary search finds the
+    * first id above `range.min`, then the walk stops past `range.max`.
+    * Both rely on the monotone ids that `append` requires, and keep
+    * the lock a partition reader shares with the producer short. */
   def slice(range: OffsetRange, tables: Option[Set[String]]): Seq[ChangeEvent] =
     synchronized {
-      events.iterator
-        .filter(e => e.eventId > range.min && e.eventId <= range.max)
+      var lo = 0
+      var hi = events.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (events(mid).eventId <= range.min) lo = mid + 1 else hi = mid
+      }
+      events.view.drop(lo)
+        .takeWhile(_.eventId <= range.max)
         .filter(e => tables.forall(_.contains(e.eventType)))
         .toVector
     }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -12,13 +13,16 @@ import graft.util.Cols
  * dataflow (SURVEY.md §3.1) as one Structured Streaming job:
  *
  *   changelog source → (watermark) → per-batch commit-ts enrichment
- *   (broadcast join, replacing the N+1 lookups) → pipe-delimited files.
+ *   (`max(ts)` over a `user_id` window, replacing the N+1 lookups in
+ *   one scan of the batch) → pipe-delimited files.
  *
  * The coordinator thread, the bounded queue, N worker threads, and the
  * per-worker chunk files all disappear into the engine: trigger
  * interval ≙ `sleepDuration`, source partitions ≙ `numberOfThread`,
- * one output file per partition ≙ `chunk<i>`, checkpointed offsets ≙
- * the (previously unpersisted) `maxSeqID` ledger.
+ * checkpointed offsets ≙ the (previously unpersisted) `maxSeqID`
+ * ledger. Each micro-batch lands as text files under `batch=<id>`, one
+ * per partition of the window's `user_id` shuffle after adaptive
+ * coalescing (a small batch writes one file), not one per worker.
  */
 object ExtractionPipeline {
 
@@ -40,18 +44,18 @@ object ExtractionPipeline {
   /** The streamed rows rendered in `chunk` pipe format (S5 fidelity):
     * keyed by offset, timestamps as epoch micros, money via DECIMAL. */
   def pipeFormat(stream: DataFrame): DataFrame =
-    stream.select(col("event_id"),
-      CdcOps.pipeLine(Seq(col("event_id"), Cols.epochUs(col("ts")),
-        col("user_id"), col("event_type"),
-        col("value").cast("decimal(18,2)"), col("props"))).as("line"))
+    stream.select(col("event_id"), CdcOps.pipeLine(changeFields).as("line"))
+
+  private def changeFields: Seq[Column] =
+    Seq(col("event_id"), Cols.epochUs(col("ts")), col("user_id"),
+      col("event_type"), col("value").cast("decimal(18,2)"), col("props"))
 
   /**
    * Start the extraction: every micro-batch is enriched with the
-   * transaction commit timestamp (distinct txids → broadcast join —
-   * the set-oriented replacement for `WorkerRunnable.java:130-144`)
-   * and appended as pipe-delimited text, one file per partition.
-   * Exactly-once comes from the checkpointed offsets + Spark's
-   * transactional file sink.
+   * transaction commit timestamp ([[withCommitTs]] — the set-oriented
+   * replacement for `WorkerRunnable.java:130-144`) and written as
+   * pipe-delimited text by [[writeBatch]]. Exactly-once comes from the
+   * checkpointed offsets + the batchId-keyed overwrite.
    */
   def start(stream: DataFrame, outDir: String, checkpointDir: String,
             triggerMs: Long = 1000L,
@@ -78,17 +82,26 @@ object ExtractionPipeline {
    * `CoordinatorRunnable.java:35-42`). [[ExactlyOnceSinkSpec]] kills a
    * batch after a partial write and proves the law.
    */
-  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    val dim = CdcOps.commitTsDim(batch)
-    val enriched = CdcOps.enrichCommitTs(batch, dim)
-    enriched.select(
-        CdcOps.pipeLine(Seq(col("event_id"), Cols.epochUs(col("ts")),
-          col("user_id"), col("event_type"),
-          col("value").cast("decimal(18,2)"), col("props"),
-          Cols.epochUs(col("commit_ts")))).as("line"))
+  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    pipeLines(withCommitTs(batch))
       .write.mode("overwrite").text(s"$outDir/batch=$batchId")
-    ()
-  }
+
+  /**
+   * Add `commit_ts` = the transaction's max `ts` within `batch`, as a
+   * window over `user_id` (the txid). Same rows and values as
+   * `CdcOps.enrichCommitTs(batch, CdcOps.commitTsDim(batch))` — the dim
+   * is built from the same batch and `user_id` is non-nullable, so that
+   * inner join drops nothing — but the batch is read once, not twice.
+   */
+  def withCommitTs(batch: DataFrame): DataFrame =
+    batch.withColumn("commit_ts",
+      max(col("ts")).over(Window.partitionBy(col("user_id"))))
+
+  /** Enriched change rows as the extraction's `line` column: the
+    * [[pipeFormat]] fields followed by the commit timestamp. */
+  def pipeLines(enriched: DataFrame): DataFrame =
+    enriched.select(CdcOps.pipeLine(
+      changeFields :+ Cols.epochUs(col("commit_ts"))).as("line"))
 
   /**
    * Deduplicate redelivered change events by offset within the

@@ -270,7 +270,9 @@ class FileChangeLogPartitionReader(p: FileChangeLogPartition)
       current.getLong("user_id", 0),
       UTF8String.fromString(current.getString("event_type", 0)),
       current.getDouble("value", 0),
-      UTF8String.fromString(current.getString("props", 0)))
+      // nullable column: a null `props` is stored as no value at all
+      if (current.getFieldRepetitionCount("props") == 0) null
+      else UTF8String.fromString(current.getString("props", 0)))
   }
 
   override def close(): Unit = reader.close()

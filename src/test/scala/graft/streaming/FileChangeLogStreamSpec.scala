@@ -101,4 +101,34 @@ class FileChangeLogStreamSpec extends SparkSpec {
       assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
     } finally q.stop()
   }
+
+  test("null props stream through the extraction pipeline as `null`") {
+    // Schema declares props nullable and the in-memory source passes
+    // null through; a segment holding null props must do the same
+    val dir = tmp()
+    val out = tmp()
+    val baseMs = 1700000000000L
+    val rows = (0 until 30).map { i =>
+      (i.toLong, new Timestamp(baseMs + i * 1000L), i.toLong % 4, "click",
+        i + 0.25, if (i % 3 == 0) None else Some(s"p$i"))
+    }
+    FileChangeLogStream.writeSegment(
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      dir)
+    val stream = spark.readStream.format(FileChangeLogStream.FormatName)
+      .option("path", dir).load()
+    val q = ExtractionPipeline.start(stream, out, tmp(), triggerMs = 0L)
+    try q.processAllAvailable() finally q.stop()
+
+    // one batch holds the whole segment: commit_ts is each txid's max ts
+    val commitUs = rows.groupBy(_._3).map { case (u, rs) =>
+      u -> rs.map(_._2.getTime * 1000L).max }
+    val expected = rows.map { case (id, ts, u, t, v, p) =>
+      Seq(id, ts.getTime * 1000L, u, t, f"$v%.2f", p.getOrElse("null"),
+        commitUs(u)).mkString("|")
+    }.sorted
+    val got = spark.read.text(out).select("value").as[String].collect().sorted
+    assert(got.toSeq == expected)
+    assert(got.count(_.split('|')(5) == "null") == 10)
+  }
 }
