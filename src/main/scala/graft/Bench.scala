@@ -1,62 +1,113 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.util.{Meter, Run}
 object Bench {
+  /** One query's measured reps. A query stops at its first throwing rep
+    * and counts as failed: its timings measured a crash, so it stays out
+    * of every total and is listed by name instead. */
+  final case class QueryRuns(name: String, runs: Seq[Run[Unit]]) {
+    def ok: Boolean = runs.forall(_.ok)
+    def error: Option[Throwable] = runs.last.result.left.toOption
+    // the run WITH the median wall, whole: independently-medianed
+    // wall and cpu can pair numbers no run exhibited, skewing the
+    // cpu-vs-wall contention read the env fields exist for
+    def median: Run[Unit] = runs.sortBy(_.wallS).apply((runs.size - 1) / 2)
+  }
+
+  // Median-of-reps (r7 verdict item 6): single cold runs carried
+  // ±0.5 s session noise that kept eating the cross-round regression
+  // signal (r7's top "regressions" were all host drift). Each query
+  // runs `reps` times IN SESSION; the parsed line reports the
+  // median (for reps=3: the middle run), bench_full.json keeps the
+  // cold first-run numbers alongside. Plan construction re-executes
+  // per rep, so build-time work (KMeans fit, checkpoint
+  // materialization) is honestly re-paid each run.
+  def measure(queries: Seq[(String, () => Unit)], reps: Int): Seq[QueryRuns] =
+    queries.map { case (name, body) =>
+      val runs = Meter.repeat(reps)(body())
+      runs.last.result.left.foreach { e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
+      QueryRuns(name, runs)
+    }
+
+  /** Wall and CPU seconds summed over the ok queries' median runs. */
+  def totals(results: Seq[QueryRuns]): (Double, Double) = {
+    val med = results.filter(_.ok).map(_.median)
+    (med.map(_.wallS).sum, med.map(_.cpuS).sum)
+  }
+
+  def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The parsed result line. The harness that captures it keeps only a
+    * ~2000-char tail of stdout (observed: round-2's 2.4 KB line was
+    * front-truncated and unparseable), so values carry millisecond
+    * precision and, if the line would still pass 1800 chars, the fastest
+    * timed queries are dropped and counted in `queries_omitted` — the
+    * headline "value" always covers every timed query. Failed queries
+    * are never timed: a `"failed"` key lists them, only when there are
+    * any, and is never dropped for length. */
+  def renderLine(results: Seq[QueryRuns], stealPct: Double, busyPct: Double,
+                 reps: Int, sfDir: String): String = {
+    val (total, cpuTotal) = totals(results)
+    val timed = results.filter(_.ok).map(q => q.name -> q.median.wallS)
+    val failed = results.filterNot(_.ok).map(_.name)
+    val fl =
+      if (failed.isEmpty) ""
+      else failed.sorted.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+    def line(qs: Seq[(String, Double)], omitted: Int): String = {
+      val m = qs.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+        s""""cpu_total":${fmt(cpuTotal)},"steal_pct":${fmt(stealPct)},""" +
+        s""""host_busy_pct":${fmt(busyPct)},"reps":$reps,""" +
+        s""""queries":$m$om$fl,"sf":"$sfDir"}"""
+    }
+    var keep = timed.sortBy(-_._2)
+    var s = line(keep, 0)
+    while (s.length > 1800 && keep.nonEmpty) {
+      keep = keep.dropRight(1)
+      s = line(keep, timed.size - keep.size)
+    }
+    s
+  }
+
+  /** Untimed warmup: JIT + codegen + datasource init cost seconds on
+    * the first jobs of a JVM; without this the alphabetically-first
+    * query absorbs it all. Touch every table's footer and push one
+    * tiny job through the join/window/agg/regexp codegen paths —
+    * infrastructure warmup only, no query work is precomputed. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      import org.apache.spark.sql.functions._
+      spark.range(1000000).selectExpr("sum(id)").write
+        .mode("overwrite").format("noop").save()
+      for (t <- Seq("region", "nation", "customer", "supplier", "part",
+          "orders", "lineitem", "events", "documents", "embeddings"))
+        try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).write
+          .mode("overwrite").format("noop").save()
+        catch { case _: Throwable => () }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy("id")
+      spark.range(10000)
+        .selectExpr("id", "id % 10 AS g", "CAST(id AS STRING) AS s")
+        .withColumn("t", split(regexp_replace(lower(col("s")), "0", " "), " "))
+        .withColumn("rn", row_number().over(w))
+        .join(spark.range(10).selectExpr("id AS g2"), col("g") === col("g2"))
+        .groupBy("g").agg(count(lit(1)), sum("id"))
+        .write.mode("overwrite").format("noop").save()
+    } catch { case _: Throwable => () }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // codegen-class cache, tmpfs scratch, buffered shuffle-merge copy:
-    // the three measured session-infrastructure floors — evidence and
-    // production settings in graft.util.SessionTuning's scaladoc
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     // ERROR, not WARN: benchmark queries legitimately emit WARN spam
     // (WindowExec on provably-tiny unpartitioned windows, hundreds of
     // lines) and the driver parses a ~2000-char stdout TAIL — one
     // warning burst after the JSON line would clip it (observed r1/r2
     // "parsed: null"). Nothing below ERROR may reach stdout/stderr.
     spark.sparkContext.setLogLevel("ERROR")
-    // Process CPU alongside wall time: the sandbox is CPU-throttled
-    // from outside (r4: hypervisor steal spikes to 37%, arbitrary
-    // queries stall 10-40x in wall time on identical code). CPU time
-    // barely moves under steal, so wall≫cpu flags a throttled run —
-    // the signal that a "regression" is environmental.
-    val cpuNs: () => Long =
-      try {
-        val b = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-          .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-        b.getProcessCpuTime // probe once so a failure falls back now
-        () => b.getProcessCpuTime
-      } catch { case _: Throwable => () => 0L }
-    // JIT self-attribution (r11: six driver queries ran 2-8x their
-    // isolated fresh-JVM medians with no code change; the isolated
-    // reps proved noise-class but the driver artifact itself couldn't
-    // say so). Per-run JIT-compilation-time deltas and the final
-    // code-cache occupancy land in bench_full.json, so the NEXT
-    // unexplained blowup is attributable from the round's own
-    // artifact: a fat jit delta on the slow rep = compiler storm, a
-    // near-full code cache = flush thrash, neither = host stall.
-    val jitMs: () => Long =
-      try {
-        val cb = java.lang.management.ManagementFactory.getCompilationMXBean
-        if (cb != null && cb.isCompilationTimeMonitoringSupported)
-          () => cb.getTotalCompilationTime
-        else () => 0L
-      } catch { case _: Throwable => () => 0L }
-    // GC self-attribution (r15: the r14 driver bench showed q18-class
-    // queries at 11 s wall with cpu≈wall and near-zero jit delta — a
-    // collector storm, not query work or steal. Per-run GC-time deltas
-    // in bench_full.json let the NEXT such blowup name its mechanism.)
-    val gcMs: () => Long =
-      try {
-        import scala.jdk.CollectionConverters._
-        val beans = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.asScala.toSeq
-        beans.map(_.getCollectionTime).sum // probe once, fall back now
-        () => beans.map(_.getCollectionTime).sum
-      } catch { case _: Throwable => () => 0L }
     def codeCacheUsedMb(): Long =
       try {
         import scala.jdk.CollectionConverters._
@@ -83,30 +134,7 @@ object Bench {
       (load, jiffies)
     }
     val (loadBefore, jifBefore) = procSample()
-    // Untimed warmup: JIT + codegen + datasource init cost seconds on
-    // the first jobs of a JVM; without this the alphabetically-first
-    // query absorbs it all. Touch every table's footer and push one
-    // tiny job through the join/window/agg/regexp codegen paths —
-    // infrastructure warmup only, no query work is precomputed.
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(1000000).selectExpr("sum(id)").write
-        .mode("overwrite").format("noop").save()
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"))
-        try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).write
-          .mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("g").orderBy("id")
-      spark.range(10000)
-        .selectExpr("id", "id % 10 AS g", "CAST(id AS STRING) AS s")
-        .withColumn("t", split(regexp_replace(lower(col("s")), "0", " "), " "))
-        .withColumn("rn", row_number().over(w))
-        .join(spark.range(10).selectExpr("id AS g2"), col("g") === col("g2"))
-        .groupBy("g").agg(count(lit(1)), sum("id"))
-        .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // noop sink: forces full evaluation of every output column
     // (count() would let Catalyst prune the projection and undercount
     // the real work).
@@ -131,38 +159,12 @@ object Bench {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_QUERIES selected zero known queries " +
           s"(given: ${only.map(_.mkString(",")).getOrElse("")})")
-    // Median-of-reps (r7 verdict item 6): single cold runs carried
-    // ±0.5 s session noise that kept eating the cross-round regression
-    // signal (r7's top "regressions" were all host drift). Each query
-    // runs `reps` times IN SESSION; the parsed line reports the
-    // median (for reps=3: the middle run), bench_full.json keeps the
-    // cold first-run numbers alongside. Plan construction re-executes
-    // per rep, so build-time work (KMeans fit, checkpoint
-    // materialization) is honestly re-paid each run.
     val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(3)
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = (1 to reps).map { _ =>
-        val c0 = cpuNs()
-        val j0 = jitMs()
-        val g0 = gcMs()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        ((System.nanoTime() - t0) / 1e9, (cpuNs() - c0) / 1e9,
-          (jitMs() - j0) / 1e3, (gcMs() - g0) / 1e3)
-      }
-      // the run WITH the median wall, whole: independently-medianed
-      // wall and cpu can pair numbers no run exhibited, skewing the
-      // cpu-vs-wall contention read the env fields exist for
-      val med = runs.sortBy(_._1).apply((runs.size - 1) / 2)
-      name -> (med, runs)
-    }
-    val wallByName = results.map { case (n, ((w, _, _, _), _)) => n -> w }.toMap
-    val total = results.map(_._2._1._1).sum
-    val cpuTotal = results.map(_._2._1._2).sum
+    val results = measure(selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+    }, reps)
+    val (total, cpuTotal) = totals(results)
     val (loadAfter, jifAfter) = procSample()
     // host-wide steal% and busy% over the run window (jiffy deltas;
     // /proc/stat cpu fields: user nice system idle iowait irq softirq
@@ -176,50 +178,30 @@ object Bench {
         val idle = d(3) + (if (d.length > 4) d(4) else 0L)
         (d(7) / tot * 100.0, (tot - idle) / tot * 100.0)
       } else (-1.0, -1.0)
-    // The harness that captures this line keeps only a ~2000-char tail
-    // of stdout (observed: round-2's 2.4 KB line was front-truncated
-    // and unparseable). Emit millisecond precision and, if the line
-    // would still overflow the window, keep the slowest queries and
-    // count the rest — the headline "value" always covers ALL queries.
-    def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def line(qs: Seq[(String, Double)], omitted: Int): String = {
-      val m = qs.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""cpu_total":${fmt(cpuTotal)},"steal_pct":${fmt(stealPct)},""" +
-        s""""host_busy_pct":${fmt(busyPct)},"reps":$reps,""" +
-        s""""queries":$m$om,"sf":"$sfDir"}"""
-    }
-    val bySlow = wallByName.toSeq.sortBy(-_._2)
-    val full = line(bySlow, 0)
-    val out =
-      if (full.length <= 1800) full
-      else {
-        var keep = bySlow
-        var s = full
-        while (s.length > 1800 && keep.nonEmpty) {
-          keep = keep.dropRight(1)
-          s = line(keep, results.size - keep.size)
+    val out = renderLine(results, stealPct, busyPct, reps, sfDir)
+    // Full-precision per-query record for local analysis (the parsed
+    // line above is size-capped). Written twice: the canonical path,
+    // overwritten by every run, plus a round- or time-stamped copy so
+    // runs stay distinguishable evidence across rounds.
+    val fullJson = results
+      .map { q =>
+        val body = q.error match {
+          case Some(e) =>
+            "{\"status\":\"failed\",\"error\":" + Verify.jsonQuote(
+              Option(e.getMessage).getOrElse(e.getClass.getName)) + "}"
+          case None =>
+            val m = q.median
+            // runs rows are [wall_s, cpu_s, jit_s, gc_s] — jit is THIS
+            // JVM's total-compilation-time delta over the run, gc its
+            // collector-time delta (cpu≈wall + fat gc = collector storm)
+            val rs = q.runs.map(r => s"[${r.wallS},${r.cpuS},${r.jitS},${r.gcS}]")
+              .mkString("[", ",", "]")
+            "{\"status\":\"ok\",\"wall\":" + m.wallS + ",\"cpu\":" + m.cpuS +
+              ",\"jit\":" + m.jitS + ",\"gc\":" + m.gcS +
+              ",\"wall_cold\":" + q.runs.head.wallS + ",\"cpu_cold\":" +
+              q.runs.head.cpuS + ",\"runs\":" + rs + "}"
         }
-        s
-      }
-    // Full-precision per-query {wall, cpu} record for local analysis
-    // (not driver-parsed — the parsed line above is size-capped).
-    // Written twice: the driver-overwritten canonical path plus a
-    // round-stamped copy so builder-local and driver runs stay
-    // distinguishable evidence across rounds.
-    val fullJson = results.sortBy(_._1)
-      .map { case (k, ((w, c, j, g), runs)) =>
-        // runs rows are [wall_s, cpu_s, jit_s, gc_s] — jit is THIS
-        // JVM's total-compilation-time delta over the run, gc its
-        // collector-time delta (cpu≈wall + fat gc = collector storm)
-        val rs = runs.map { case (rw, rc, rj, rg) => s"[$rw,$rc,$rj,$rg]" }
-          .mkString("[", ",", "]")
-        "\"" + k + "\":{\"wall\":" + w + ",\"cpu\":" + c +
-          ",\"jit\":" + j + ",\"gc\":" + g +
-          ",\"wall_cold\":" + runs.head._1 + ",\"cpu_cold\":" +
-          runs.head._2 + ",\"runs\":" + rs + "}" }
+        "\"" + q.name + "\":" + body }
       .mkString("{", ",", "}")
     try {
       val body =
@@ -227,8 +209,8 @@ object Bench {
           s""""reps":$reps,""" +
           s""""env":{"load_before":"$loadBefore","load_after":"$loadAfter",""" +
           s""""steal_pct":${fmt(stealPct)},"host_busy_pct":${fmt(busyPct)},""" +
-          s""""jit_total_s":${fmt(jitMs() / 1e3)},""" +
-          s""""gc_total_s":${fmt(gcMs() / 1e3)},""" +
+          s""""jit_total_s":${fmt(Meter.jitMs() / 1e3)},""" +
+          s""""gc_total_s":${fmt(Meter.gcMs() / 1e3)},""" +
           s""""heap_max_mb":${Runtime.getRuntime.maxMemory / (1024 * 1024)},""" +
           s""""code_cache_used_mb":${codeCacheUsedMb()}},""" +
           s""""queries":$fullJson}""").getBytes("UTF-8")

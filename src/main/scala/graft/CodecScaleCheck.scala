@@ -2,10 +2,10 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Multimodal
+import graft.util.Meter
 
 /**
  * Dev-only decode-throughput probe for the REAL image codec (r9
@@ -133,27 +133,14 @@ object CodecScaleCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = args.headOption.filter(a => a.toLongOption.isEmpty)
       .getOrElse("image")
     val nArgs = args.flatMap(_.toLongOption)
     val n20 = nArgs.headOption.getOrElse(10000L)
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
     val listener = new graft.streaming.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    def settled(): graft.streaming.ResourceSummary = {
-      var last = -1L
-      while (last != listener.samples.size.toLong) {
-        last = listener.samples.size.toLong; Thread.sleep(100)
-      }
-      listener.summary
-    }
     def gen(n: Long, bytes: Long => Array[Byte]) = {
       // constant partition SIZE (~2500 payloads each), generation
       // checkpointed before any clock starts
@@ -167,9 +154,9 @@ object CodecScaleCheck {
     def timed(reps: Int)(body: => Unit): Double =
       (1 to reps).map { _ =>
         listener.reset()
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
+        val run = Meter.run(body)
+        run.get
+        run.wallS
       }.min
 
     for (n <- Seq(n20, n20 * 5)) mode match {
@@ -180,7 +167,7 @@ object CodecScaleCheck {
             Multimodal.decodeImagesBatched(media, batchSize = bs)
               .write.mode("overwrite").format("noop").save()
           }
-          val res = settled()
+          val res = Meter.settle(listener)
           println(f"CODECSCALE n=$n%7d batch=$bs%4d wall=$t%7.2fs " +
             f"rows_per_s=${n / t}%9.0f ${res.render}")
         }
@@ -210,7 +197,7 @@ object CodecScaleCheck {
                 corpusSize = Some(n))
               .write.mode("overwrite").format("noop").save()
           }
-          val res = settled()
+          val res = Meter.settle(listener)
           val pairs = Multimodal.ahashNearDupPairs(media, grid = grid,
             corpusSize = Some(n)).count()
           val kept = Multimodal.realMediaManifest(media, grid = grid,
@@ -230,14 +217,14 @@ object CodecScaleCheck {
           Multimodal.decodeAudioBatched(media)
             .write.mode("overwrite").format("noop").save()
         }
-        val res = settled()
+        val res = Meter.settle(listener)
         println(f"CODECSCALE mode=audio-decode n=$n%7d wall=$t%7.2fs " +
           f"rows_per_s=${n / t}%9.0f ${res.render}")
         val tE = timed(2) {
           Multimodal.audioBlockEnergies(media, blockSamples = 1000)
             .write.mode("overwrite").format("noop").save()
         }
-        val resE = settled()
+        val resE = Meter.settle(listener)
         // 4000 samples / 1000-sample blocks = 4 rows per payload
         val nb = Multimodal.audioBlockEnergies(media,
           blockSamples = 1000).count()
@@ -252,7 +239,7 @@ object CodecScaleCheck {
           Multimodal.sampleFramesBatched(media, everyN = 2)
             .write.mode("overwrite").format("noop").save()
         }
-        val res = settled()
+        val res = Meter.settle(listener)
         // 8 frames sampled every 2 = 4 rows per payload
         val nf = Multimodal.sampleFramesBatched(media, everyN = 2).count()
         require(nf == 4L * n, s"frames=$nf want ${4L * n}")
@@ -262,7 +249,7 @@ object CodecScaleCheck {
           Multimodal.sceneCuts(media, everyN = 2)
             .write.mode("overwrite").format("noop").save()
         }
-        val resC = settled()
+        val resC = Meter.settle(listener)
         // cuts: comparisons at sampled frames 2,4,6; the flip at
         // frame 4 crosses the threshold once per payload
         val cuts = Multimodal.sceneCuts(media, everyN = 2)

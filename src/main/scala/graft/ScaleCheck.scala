@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, TextOps}
 import graft.sources.ChangeLogSource
+import graft.util.Meter
 
 /**
  * Dev-only scale probe: replicates the sf0.1 tables in memory (ids
@@ -919,17 +920,6 @@ object ScaleCheck {
   private def runExponent(spark: SparkSession, sfDir: String): Unit = {
     val listener = new graft.streaming.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // listener delivery is async: poll until the sample stream goes
-    // quiet so a run's summary doesn't truncate its tail tasks
-    def settledSummary(): graft.streaming.ResourceSummary = {
-      var n = -1L; var same = 0; val deadline = System.currentTimeMillis + 10000
-      while (same < 3 && System.currentTimeMillis < deadline) {
-        val c = listener.samples.size.toLong
-        if (c == n) same += 1 else { same = 0; n = c }
-        Thread.sleep(50)
-      }
-      listener.summary
-    }
     val scales = Seq(20, 100)
     // SCALE-PAIRED measurement (r9): both replica sets are resident and
     // each probe measures its two scales BACK-TO-BACK, so a ratio
@@ -983,24 +973,22 @@ object ScaleCheck {
       // own).
       val reps = (1 to 2).map { _ =>
         listener.reset()
-        val t0 = System.nanoTime()
-        val ok =
-          try { f().write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable =>
-            // keep the sweep alive: one pathological probe must not
-            // cost the other measurements; FAILED is loud in the log
-            println(s"SCALEEXP   ${sc}x $name FAILED: ${e.getMessage}")
-            false
-          }
-        dropProbeStorage()
-        val wall = (System.nanoTime() - t0) / 1e9
-        (wall, settledSummary(), ok)
+        // the sweep stays alive past a failed run: one pathological
+        // probe must not cost the other measurements; FAILED is loud
+        // in the log
+        val run = Meter.run {
+          try f().write.mode("overwrite").format("noop").save()
+          finally dropProbeStorage()
+        }
+        run.result.left.foreach(e =>
+          println(s"SCALEEXP   ${sc}x $name FAILED: ${e.getMessage}"))
+        (run, Meter.settle(listener))
       }
       // a failed run's truncated wall time must not enter the min or
       // the ratio table (advisory r9): NaN here, a dash in the summary
-      val (dt, res) = reps.filter(_._3) match {
+      val (dt, res) = reps.filter(_._1.ok) match {
         case Seq() => (Double.NaN, reps.last._2)
-        case good  => { val m = good.minBy(_._1); (m._1, m._2) }
+        case good  => { val m = good.minBy(_._1.wallS); (m._1.wallS, m._2) }
       }
       println(f"SCALEEXP   ${sc}%3dx $name%-28s $dt%8.2f s  ${res.render}")
       (dt, res)
@@ -1038,15 +1026,9 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val docCopies = args.lift(0).flatMap(_.toIntOption).getOrElse(20)
     val embCopies = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     if (args.headOption.contains("exp")) {
       runExponent(spark, sfDir)
@@ -1055,10 +1037,9 @@ object ScaleCheck {
     }
 
     def time(name: String)(f: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val out = f
-      out.write.mode("overwrite").format("noop").save()
-      println(f"SCALE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+      val run = Meter.run(f.write.mode("overwrite").format("noop").save())
+      run.get
+      println(f"SCALE $name%-28s ${run.wallS}%8.2f s")
     }
 
     // SPARK_GRAFT_PROBES=a,b,c restricts the run to named probes

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver t1 stand-in: runs [[SparkEntry.entry]] exactly as the driver's
   * smoke check does (rows > 0 on sf0.001) and prints the row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val rows = SparkEntry.entry(spark).count()
     println(s"SMOKE entry rows=$rows sample:")
     SparkEntry.entry(spark).show(3, truncate = false)

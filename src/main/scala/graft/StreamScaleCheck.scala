@@ -241,17 +241,19 @@ object StreamScaleCheck {
       .option("checkpointLocation",
         Files.createTempDirectory("ssc-cur-ck").toString)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[_], id: Long) =>
-        val t0 = System.nanoTime()
-        val verdicts = StreamingNearDup.verdicts(b.toDF())
-        val nDocs = verdicts.count()
-        val fresh = verdicts
-          .filter(!col("is_candidate")).select(col("doc_id"))
-        val kept = spark.read.parquet(docstore)
-          .join(fresh, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("text"))
-        val n = graft.operators.TextOps.bpeEncodeWith(kept, model)
-          .agg(count(lit(1)), sum(col("n_tokens"))).head().getLong(0)
-        curated += ((id, nDocs, n, (System.nanoTime() - t0) / 1000000L))
+        val run = graft.util.Meter.run {
+          val verdicts = StreamingNearDup.verdicts(b.toDF())
+          val nDocs = verdicts.count()
+          val fresh = verdicts
+            .filter(!col("is_candidate")).select(col("doc_id"))
+          val kept = spark.read.parquet(docstore)
+            .join(fresh, Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("text"))
+          (nDocs, graft.operators.TextOps.bpeEncodeWith(kept, model)
+            .agg(count(lit(1)), sum(col("n_tokens"))).head().getLong(0))
+        }
+        val (nDocs, n) = run.get
+        curated += ((id, nDocs, n, (run.wallS * 1000).toLong))
         ()
       }.start()
     try {
@@ -609,12 +611,8 @@ object StreamScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder()
       .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val want: Set[String] =

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.TextOps
+import graft.util.Meter
 
 /**
  * Dev-only tokenizer-scale probe (r10 verdict item 3 + "What's wrong"
@@ -61,9 +62,8 @@ object TokenizerScaleCheck {
       val vocab = zipfVocab(v)
       System.gc()
       val before = heapMb()
-      val t0 = System.nanoTime()
-      val merges = TextOps.bpeMergesInMemoryIndexed(vocab, rounds)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val run = Meter.run(TextOps.bpeMergesInMemoryIndexed(vocab, rounds))
+      val (merges, dt) = (run.get, run.wallS)
       val after = heapMb()
       println(f"TOKSCALE trainer V=$v%8d rounds=$rounds%6d " +
         f"merges=${merges.size}%6d wall=$dt%8.2fs " +
@@ -78,13 +78,6 @@ object TokenizerScaleCheck {
     import spark.implicits._
     val listener = new graft.streaming.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    def settled(): graft.streaming.ResourceSummary = {
-      var last = -1L
-      while (last != listener.samples.size.toLong) {
-        last = listener.samples.size.toLong; Thread.sleep(100)
-      }
-      listener.summary
-    }
     // a 1024-merge model trained on the same type space
     val model = TextOps.BpeModel(
       TextOps.bpeMergesInMemoryIndexed(zipfVocab(100000), 1024))
@@ -119,12 +112,12 @@ object TokenizerScaleCheck {
         .distinct().count()
       val t = (1 to 2).map { _ =>
         listener.reset()
-        val t0 = System.nanoTime()
-        TextOps.bpeEncodeWithLocal(docs, model)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
+        val run = Meter.run(TextOps.bpeEncodeWithLocal(docs, model)
+          .write.mode("overwrite").format("noop").save())
+        run.get
+        run.wallS
       }.min
-      val res = settled()
+      val res = Meter.settle(listener)
       val tokens = nDocs * wordsPerDoc
       println(f"TOKSCALE serving docs=$nDocs%7d tokens=$tokens%10d " +
         f"types=$nTypes%8d wall=$t%7.2fs " +
@@ -137,13 +130,7 @@ object TokenizerScaleCheck {
     val mode = args.headOption.getOrElse("all")
     if (mode == "trainer" || mode == "all") trainerProbe()
     if (mode == "serving" || mode == "all") {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local()
       servingProbe(spark)
       spark.stop()
     }

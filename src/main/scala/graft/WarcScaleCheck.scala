@@ -55,8 +55,7 @@ object WarcScaleCheck {
   def main(args: Array[String]): Unit = {
     val sizesMiB =
       if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(288L, 1152L, 4608L)
-    val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val dir = java.nio.file.Files.createTempDirectory("warc-scale")
     try {
       for (mib <- sizesMiB) {
@@ -76,16 +75,15 @@ object WarcScaleCheck {
         sampler.setDaemon(true)
         System.gc()
         sampler.start()
-        val t0 = System.nanoTime()
-        val counts = graft.operators.Warc
+        val run = graft.util.Meter.run(graft.operators.Warc
           .readWarcFilesStream(spark, f.toString)
           .agg(count(lit(1)).as("n"),
             sum(when(col("ok"), 0L).otherwise(1L)).as("flagged"),
             sum(length(col("block"))).as("bytes"))
-          .collect().head
-        val wall = (System.nanoTime() - t0) / 1e9
+          .collect().head)
         stop = true
         sampler.join()
+        val (counts, wall) = (run.get, run.wallS)
         println(f"WARCSTREAM inflated_mib=$mib%d gen_records=$nGen%d " +
           f"records=${counts.getLong(0)}%d flagged=${counts.getLong(1)}%d " +
           f"block_bytes=${counts.getLong(2)}%d wall_s=$wall%.1f " +

@@ -1,7 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.EventGroups
 import graft.sources.ChangeLogSource
 import graft.streaming.{ChangeEvent, ChangeLogBuffers, ExtractionPipeline, FileChangeLogStream, StalenessListener}
@@ -43,14 +41,7 @@ object Main {
     // in-process buffer to the file-backed source (production shape).
     val sourceDir = sys.props.get("graft.sourceDir")
 
-    // local-mode session floors (scratch dir, shuffle copy path,
-    // codegen cache) — see graft.util.SessionTuning
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$partitions]")
-      .appName("graft-extractor")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val spark = graft.GraftSession.builder().appName("graft-extractor")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -7,12 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /**
  * Session extension registering the engine's custom expressions in the
  * SQL function registry, so `spark.sql("SELECT simhash64(...)")` works
- * alongside the Column API:
- *
- * {{{
- * SparkSession.builder()
- *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
- * }}}
+ * alongside the Column API. [[graft.GraftSession]] registers it through
+ * `spark.sql.extensions`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

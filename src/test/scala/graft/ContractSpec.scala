@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -38,6 +40,19 @@ class ContractSpec extends AnyFunSuite {
   test("every oracle entry points at a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  }
+
+  test("GraftSession is the only SparkSession factory in the main sources") {
+    // one factory keeps every main's settings identical; a main that
+    // builds its own session drifts (cores, time zone, session floors)
+    val builders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p)
+        .contains("SparkSession.builder("))
+      .map(_.getFileName.toString).toSet
+    assert(builders == Set("GraftSession.scala"),
+      s"files building their own SparkSession: ${builders - "GraftSession.scala"}")
   }
 
   test("queries without an oracle are the known rows-only set") {

@@ -27,12 +27,30 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("GraftSession builder carries the recommended configs") {
-    val b = graft.GraftSession.builder(4)
-    // the builder should produce a session config with our knobs; the
-    // shared test session already exists, so inspect via a new session
-    // handle's conf after getOrCreate (same context)
-    val s = b.getOrCreate()
+    // the whole list, static settings included: the repo benchmark's
+    // session is built from it, so any drift here moves its numbers
+    assert(graft.GraftSession.settings(4) == Seq(
+      "spark.master" -> "local[4]",
+      "spark.app.name" -> "graft",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.files.maxPartitionBytes" -> "134217728",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" ->
+        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
+      "spark.local.dir" -> graft.GraftSession.localDir,
+      "spark.file.transferTo" ->
+        sys.env.getOrElse("SPARK_GRAFT_TRANSFER_TO", "false")))
+    // the shared test session already exists, so getOrCreate applies
+    // only the runtime SQL settings to it: each must arrive as listed
+    val s = graft.GraftSession.builder(4).getOrCreate()
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+    graft.GraftSession.settings(4).filter(kv => s.conf.isModifiable(kv._1))
+      .foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
   }
 }
