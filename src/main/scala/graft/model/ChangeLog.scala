@@ -1,59 +1,19 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
-/**
+/*
  * Data model for the change-data-capture (CDC) domain.
  *
- * The reference system (`/root/reference`, dbestdan/cdc-extractor) extracts
- * rows from a PostgreSQL audit change-log table `audit.logged_actions`
- * whose schema is implicit in the code: exactly 17 columns are consumed
- * (reference `WorkerRunnable.java:206`), column 9 is a bigint transaction
- * id (`WorkerRunnable.java:130`), `event_id` is the monotone offset
- * (`CoordinatorRunnable.java:35`) and `table_name` is the stream selector
- * (`WorkerRunnable.java:94`). Here that envelope is an explicit typed
- * schema: a `Dataset[AuditEvent]` / `DataFrame` with [[AuditEvent.schema]].
+ * The reference system (dbestdan/cdc-extractor) extracts rows from a
+ * PostgreSQL audit change-log table `audit.logged_actions` whose schema
+ * is implicit in the code: exactly 17 columns are consumed (reference
+ * `WorkerRunnable.java:206`), column 9 is a bigint transaction id
+ * (`WorkerRunnable.java:130`), `event_id` is the monotone offset
+ * (`CoordinatorRunnable.java:35`) and `table_name` is the stream
+ * selector (`WorkerRunnable.java:94`). Here that envelope is the
+ * 17-column `DataFrame` of `graft.sources.AuditLogGenerator.auditEvents`;
+ * this file holds the stream selectors over it and over its `events`
+ * stand-in.
  */
-final case class AuditEvent(
-    eventId: Long,             // monotone offset (bigserial PK)
-    schemaName: String,
-    tableName: String,         // stream selector
-    relid: Long,
-    sessionUserName: String,
-    actionTstampTx: java.sql.Timestamp,
-    actionTstampStm: java.sql.Timestamp,
-    actionTstampClk: java.sql.Timestamp,
-    transactionId: Long,       // join key for commit-timestamp enrichment
-    applicationName: String,
-    clientAddr: String,
-    clientPort: Int,
-    clientQuery: String,
-    action: String,            // I / U / D / T
-    rowData: Map[String, String],
-    changedFields: Map[String, String],
-    statementOnly: Boolean)
-
-object AuditEvent {
-  /** Snake-cased SQL schema of the audit envelope (17 columns). */
-  val schema: StructType = StructType(Seq(
-    StructField("event_id", LongType, nullable = false),
-    StructField("schema_name", StringType),
-    StructField("table_name", StringType),
-    StructField("relid", LongType),
-    StructField("session_user_name", StringType),
-    StructField("action_tstamp_tx", TimestampType),
-    StructField("action_tstamp_stm", TimestampType),
-    StructField("action_tstamp_clk", TimestampType),
-    StructField("transaction_id", LongType),
-    StructField("application_name", StringType),
-    StructField("client_addr", StringType),
-    StructField("client_port", IntegerType),
-    StructField("client_query", StringType),
-    StructField("action", StringType),
-    StructField("row_data", MapType(StringType, StringType)),
-    StructField("changed_fields", MapType(StringType, StringType)),
-    StructField("statement_only", BooleanType)))
-}
 
 /**
  * Named table groups selectable at run time, mirroring the reference's

@@ -258,16 +258,6 @@ object Warc {
     }
   }
 
-  /** Whole-buffer convenience wrapper over the streaming parser —
-    * fixture/spec-sized inputs only; file-scale inputs go through
-    * [[readWarcFilesStream]]. */
-  private[operators] def parseFile(id: Long, payload: Array[Byte])
-      : Seq[WarcRecord] = {
-    val p = if (payload == null) Array.empty[Byte] else payload
-    new WarcRecordIterator(id, new ByteArrayInputStream(p),
-      DefaultMaxBlockBytes, "read error").toSeq
-  }
-
   /** Is this payload gzip (1F 8B magic)? */
   private[operators] def isGzip(p: Array[Byte]): Boolean =
     p != null && p.length >= 2 && p(0) == 0x1F.toByte && p(1) == 0x8B.toByte

@@ -102,52 +102,4 @@ object ExtractionPipeline {
   def pipeLines(enriched: DataFrame): DataFrame =
     enriched.select(CdcOps.pipeLine(
       changeFields :+ Cols.epochUs(col("commit_ts"))).as("line"))
-
-  /**
-   * Deduplicate redelivered change events by offset within the
-   * watermark window — upgrades an at-least-once upstream (e.g. a
-   * connector that replays on reconnect) to exactly-once downstream
-   * without unbounded state: `dropDuplicatesWithinWatermark` evicts
-   * seen-offset state once the event-time watermark passes.
-   */
-  def dedupRedeliveries(stream: DataFrame,
-                        watermarkDelay: String = "10 minutes"): DataFrame =
-    stream.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /**
-   * Stream-stream interval join: correlate two change streams on a
-   * key within an event-time window (e.g. "purchase within 1 hour of
-   * a click by the same user"). Both sides carry watermarks so the
-   * join state is bounded — buffered rows are evicted once the
-   * watermark passes the interval.
-   */
-  def correlate(left: DataFrame, right: DataFrame,
-                keyCol: String = "user_id",
-                within: String = "1 hour",
-                watermarkDelay: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermarkDelay)
-      .select(col(keyCol).as("l_key"), col("ts").as("l_ts"),
-        col("event_id").as("l_event_id"), col("event_type").as("l_type"))
-    val r = right.withWatermark("ts", watermarkDelay)
-      .select(col(keyCol).as("r_key"), col("ts").as("r_ts"),
-        col("event_id").as("r_event_id"), col("event_type").as("r_type"))
-    l.join(r,
-      col("l_key") === col("r_key") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $within"))
-  }
-
-  /** Streaming per-minute throughput aggregation (T6) with watermarked
-    * state eviction — the windowed counters of `WorkerRunnable
-    * .java:158-179` without the unbounded maps. */
-  def throughputQuery(stream: DataFrame, outputMode: String = "update")
-      : DataFrame =
-    stream
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("n_txids"))
-      .select(col("window.start").as("minute"), col("n_events"),
-        col("n_txids"))
 }

@@ -86,8 +86,11 @@ object StreamingNearDup {
             state.remove() // bucket idle past the horizon: re-admit next
             Iterator.empty
           } else {
-            // deterministic in-batch ownership: (ts, doc_id) order,
-            // sub-second nanos included (see StreamingEwma's fold)
+            // deterministic in-batch ownership: (ts, doc_id) order.
+            // getTime alone is millisecond-truncated, so sort on whole
+            // seconds (floorDiv, exact for pre-1970 instants) and then
+            // the sub-second nanos, so microsecond timestamps keep
+            // their true order
             val ordered = rows.toSeq.sortBy(r =>
               (Math.floorDiv(r.ts.getTime, 1000L), r.ts.getNanos, r.docId))
             // a bucket whose horizon already passed the watermark is

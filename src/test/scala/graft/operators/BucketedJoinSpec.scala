@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /**
- * Bucketing co-location — the storage-layout half of the 100 TB join
+ * Bucketed co-location — the storage-layout half of the 100 TB join
  * story: two fact tables bucketed AND sorted on the join key at write
  * time join with ZERO exchanges and ZERO sorts at read time (the
  * SortMergeJoin consumes the on-disk order directly). At warehouse

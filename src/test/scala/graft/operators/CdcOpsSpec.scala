@@ -84,17 +84,23 @@ class CdcOpsSpec extends SparkSpec {
     assert(math.abs(got("view")._4 - 3.75) < 1e-12)
   }
 
-  test("typed Dataset[AuditEvent] round-trips the envelope") {
-    val ds = graft.model.AuditDataset.auditEvents(spark, "/root/testdata/sf0.001")
-    val e = ds.filter(_.eventId == 1L).head()
-    assert(e.schemaName == "audit")
-    assert(e.tableName == "bmsql_warehouse")
-    assert(e.transactionId >= 0)
-    assert(Seq("I", "U", "D").contains(e.action))
-    assert(e.rowData.contains("k") && e.rowData.contains("v"))
-    assert(e.actionTstampStm.getTime - e.actionTstampTx.getTime == 1L)
-    assert(!e.statementOnly)
-    assert(ds.count() == 1000L)
+  test("auditEvents renders the 17-column audit envelope") {
+    val audit = graft.sources.AuditLogGenerator
+      .auditEvents(spark, "/root/testdata/sf0.001")
+    assert(audit.columns.length == 17)
+    val e = audit.filter(col("event_id") === 1L)
+      .withColumn("tx_us", graft.util.Cols.epochUs(col("action_tstamp_tx")))
+      .head()
+    assert(e.getAs[String]("schema_name") == "audit")
+    assert(e.getAs[String]("table_name") == "bmsql_warehouse")
+    assert(e.getAs[Long]("transaction_id") >= 0)
+    assert(Seq("I", "U", "D").contains(e.getAs[String]("action")))
+    val rowData = e.getAs[scala.collection.Map[String, String]]("row_data")
+    assert(rowData.contains("k") && rowData.contains("v"))
+    // statement ts = transaction ts + 1 ms
+    assert(e.getAs[Long]("action_tstamp_stm_us") - e.getAs[Long]("tx_us") == 1000L)
+    assert(!e.getAs[Boolean]("statement_only"))
+    assert(audit.count() == 1000L)
   }
 
   test("tableChecksums: partition-order independent, content-sensitive") {

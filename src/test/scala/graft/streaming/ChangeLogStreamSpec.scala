@@ -119,76 +119,6 @@ class ChangeLogStreamSpec extends SparkSpec {
     assert(cols(6) == (1700000000000000L + 2000000L).toString)
   }
 
-  test("dedupRedeliveries drops replayed offsets within the watermark") {
-    val input = MemoryStream[ChangeEvent](spark)
-    val deduped = ExtractionPipeline.dedupRedeliveries(
-      input.toDS().toDF(
-        "event_id", "tsMicros", "user_id", "event_type", "value", "props")
-        .withColumn("ts", expr("timestamp_micros(tsMicros)")).drop("tsMicros"))
-    val q = deduped.writeStream.format("memory").queryName("dedup_sink")
-      .outputMode("append").option("checkpointLocation", tmp()).start()
-    try {
-      val t0 = 1700000000000000L
-      input.addData(
-        ChangeEvent(1, t0, 1, "click", 1.0, "p"),
-        ChangeEvent(2, t0 + 1000000, 1, "view", 1.0, "p"),
-        ChangeEvent(1, t0, 1, "click", 1.0, "p")) // redelivery, same batch
-      q.processAllAvailable()
-      // redelivery across batches, still inside the watermark window
-      input.addData(ChangeEvent(2, t0 + 1000000, 1, "view", 1.0, "p"),
-        ChangeEvent(3, t0 + 2000000, 1, "click", 1.0, "p"))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_sink").select("event_id")
-        .as[Long].collect()
-      assert(ids.sorted.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join correlates events within the window") {
-    val name = freshName()
-    val t0 = 1700000000000000L
-    ChangeLogBuffers.get(name).append(Seq(
-      ChangeEvent(1, t0, 7, "click", 1.0, "p"),
-      ChangeEvent(2, t0 + 600L * 1000000, 7, "purchase", 9.0, "p"),   // +10 min
-      ChangeEvent(3, t0 + 7200L * 1000000, 7, "purchase", 9.0, "p"),  // +2 h: outside
-      ChangeEvent(4, t0 + 300L * 1000000, 8, "purchase", 9.0, "p")))  // other user
-    val src = ExtractionPipeline.readChangeLog(spark, name)
-    val joined = ExtractionPipeline.correlate(
-      src.filter($"event_type" === "click"),
-      src.filter($"event_type" === "purchase"))
-    val q = joined.writeStream.format("memory").queryName(s"m$name")
-      .option("checkpointLocation", tmp()).start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table(s"m$name")
-        .select("l_event_id", "r_event_id").as[(Long, Long)].collect()
-      assert(got.toSeq == Seq((1L, 2L))) // only the within-window same-user pair
-    } finally q.stop()
-  }
-
-  test("streaming throughput query aggregates per-minute with watermark") {
-    val name = freshName()
-    val base = 1700000040000L // minute-aligned epoch millis
-    ChangeLogBuffers.get(name).append(Seq(
-      ChangeEvent(1L, base * 1000L, 1L, "click", 1.0, "p"),
-      ChangeEvent(2L, (base + 10000) * 1000L, 2L, "view", 1.0, "p"),
-      ChangeEvent(3L, (base + 70000) * 1000L, 1L, "click", 1.0, "p"),
-      ChangeEvent(4L, (base + 200000) * 1000L, 3L, "view", 1.0, "p")))
-    val q = ExtractionPipeline
-      .throughputQuery(ExtractionPipeline.readChangeLog(spark, name))
-      .writeStream.format("memory").queryName(s"m$name")
-      .outputMode("update").option("checkpointLocation", tmp()).start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table(s"m$name")
-        .select($"minute", $"n_events").as[(java.sql.Timestamp, Long)]
-        .collect().map { case (m, n) => m.getTime -> n }.toMap
-      assert(got(base) == 2L)          // minute 0: events 1, 2
-      assert(got(base + 60000) == 1L)  // minute 1: event 3
-      assert(got(base + 180000) == 1L) // minute 3: event 4
-    } finally q.stop()
-  }
-
   test("staleness listener derives now - eventTime.max with running avg") {
     val input = MemoryStream[(java.sql.Timestamp, Long)](spark)
     val fixedNow = 1700000100000L // event ts + 100 s

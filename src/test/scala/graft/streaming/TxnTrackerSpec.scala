@@ -42,39 +42,6 @@ class TxnTrackerSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState v2 tracker emits summaries on event-time timers") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[TxnEvent](spark)
-      val tracked = TxnTrackerV2.track(
-        input.toDS().withWatermark("ts", "0 seconds").as[TxnEvent])
-      val q = tracked.writeStream.format("memory").queryName("txns_v2")
-        .outputMode("append")
-        .option("checkpointLocation",
-          Files.createTempDirectory("txn2").toString)
-        .start()
-      try {
-        val t0 = 1700000000000L
-        input.addData(
-          TxnEvent(1L, new Timestamp(t0), 10L),
-          TxnEvent(1L, new Timestamp(t0 + 5000), 11L),
-          TxnEvent(2L, new Timestamp(t0 + 1000), 12L))
-        q.processAllAvailable()
-        input.addData(TxnEvent(99L, new Timestamp(t0 + 10 * 60000), 13L))
-        q.processAllAvailable()
-        input.addData(TxnEvent(98L, new Timestamp(t0 + 11 * 60000), 14L))
-        q.processAllAvailable()
-        val got = spark.table("txns_v2").as[TxnSummary].collect()
-          .map(s => s.userId -> s).toMap
-        assert(got.contains(1L) && got.contains(2L))
-        assert(got(1L).nEvents == 2L)
-        assert(got(1L).commitTs == new Timestamp(t0 + 5000))
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("custom functions are SQL-registered via GraftExtensions") {
     val sim = spark.sql(
       "SELECT simhash64(array('a', 'b')) AS s").as[Long].head()

@@ -14,6 +14,7 @@ import decimal
 import glob
 import hashlib
 import json
+import multiprocessing
 import os
 import sys
 
@@ -43,57 +44,77 @@ def canon(con, rel_sql):
     return types, len(rows), h, rows
 
 
+_con = None
+
+
+def _connect(sf_dir):
+    """This process's DuckDB connection, with the sf tables as views.
+    Opened on first use rather than in a Pool initializer: an
+    initializer that raises makes the pool respawn workers forever."""
+    global _con
+    if _con is None:
+        _con = duckdb.connect()
+        for t in TABLES:
+            p = f"{sf_dir}/{t}.parquet"
+            if os.path.exists(p):
+                _con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return _con
+
+
+def compare(job):
+    """Verdict lines for one query's dump, and "ok", "bad" or None.
+    `oracle_sql` is None for a query without an oracle entry."""
+    sf_dir, out_dir, name, oracle_sql = job
+    con = _connect(sf_dir)
+    d = os.path.join(out_dir, name)
+    files = glob.glob(f"{d}/*.parquet")
+    if not files:
+        return [f"MISSING-OUTPUT {name}"], "bad"
+    spark_rel = f"SELECT * FROM read_parquet({files!r})"
+    if oracle_sql is None:
+        n = con.sql(f"SELECT count(*) FROM ({spark_rel})").fetchone()[0]
+        return [f"ROWS-ONLY      {name}: {n} rows"], None
+    try:
+        stypes, sn, sh, srows = canon(con, spark_rel)
+        otypes, on, oh, orows = canon(con, oracle_sql)
+    except Exception as e:
+        return [f"ERROR          {name}: {e}"], "bad"
+    if sh == oh:
+        return [f"OK             {name}: {sn} rows"], "ok"
+    out = [f"MISMATCH       {name}: spark {sn} rows vs oracle {on} rows"]
+    if list(stypes) != list(otypes):
+        out.append(f"  spark cols:  {stypes}")
+        out.append(f"  oracle cols: {otypes}")
+    shown = 0
+    for a, b in zip(srows, orows):
+        if a != b and shown < 3:
+            out.append(f"  spark:  {a}\n  oracle: {b}")
+            shown += 1
+    if sn != on:
+        sset, oset = set(srows), set(orows)
+        for r in list(sset - oset)[:2]:
+            out.append(f"  only-spark:  {r}")
+        for r in list(oset - sset)[:2]:
+            out.append(f"  only-oracle: {r}")
+    return out, "bad"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    names = [n for n in sorted(os.listdir(out_dir))
+             if os.path.isdir(os.path.join(out_dir, n))]
     n_ok = n_bad = 0
-    for name in sorted(os.listdir(out_dir)):
-        d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
-        files = glob.glob(f"{d}/*.parquet")
-        if not files:
-            print(f"MISSING-OUTPUT {name}")
-            n_bad += 1
-            continue
-        spark_rel = f"SELECT * FROM read_parquet({files!r})"
-        if name not in oracle:
-            n = con.sql(f"SELECT count(*) FROM ({spark_rel})").fetchone()[0]
-            print(f"ROWS-ONLY      {name}: {n} rows")
-            continue
-        try:
-            stypes, sn, sh, srows = canon(con, spark_rel)
-            otypes, on, oh, orows = canon(con, oracle[name])
-        except Exception as e:
-            print(f"ERROR          {name}: {e}")
-            n_bad += 1
-            continue
-        if sh == oh:
-            print(f"OK             {name}: {sn} rows")
-            n_ok += 1
-        else:
-            n_bad += 1
-            print(f"MISMATCH       {name}: spark {sn} rows vs oracle {on} rows")
-            if list(stypes) != list(otypes):
-                print(f"  spark cols:  {stypes}")
-                print(f"  oracle cols: {otypes}")
-            shown = 0
-            for a, b in zip(srows, orows):
-                if a != b and shown < 3:
-                    print(f"  spark:  {a}\n  oracle: {b}")
-                    shown += 1
-            if sn != on:
-                sset, oset = set(srows), set(orows)
-                for r in list(sset - oset)[:2]:
-                    print(f"  only-spark:  {r}")
-                for r in list(oset - sset)[:2]:
-                    print(f"  only-oracle: {r}")
+    # One query per task, each worker with its own connection; imap
+    # yields in submission order, so the lines print in name order.
+    with multiprocessing.Pool(os.cpu_count()) as pool:
+        jobs = [(sf_dir, out_dir, n, oracle.get(n)) for n in names]
+        for lines, verdict in pool.imap(compare, jobs):
+            for line in lines:
+                print(line)
+            n_ok += verdict == "ok"
+            n_bad += verdict == "bad"
     print(f"\n{n_ok} ok, {n_bad} bad")
     sys.exit(1 if n_bad else 0)
 
