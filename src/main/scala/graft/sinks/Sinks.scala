@@ -1,28 +1,62 @@
 package graft.sinks
 
+import java.io.BufferedOutputStream
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CdcOps
 import graft.streaming.StalenessListener
 
 /**
  * Batch sinks mirroring the reference's outputs (SURVEY.md §2.1 S5/S6),
- * on Spark's transactional file committers instead of per-row
- * `flush()` (`WorkerRunnable.java:211` — deliberately not replicated).
+ * committed by atomic rename (pipe chunks) or Spark's file committers
+ * (the rest) instead of per-row `flush()` (`WorkerRunnable.java:211`).
  */
 object Sinks {
 
   /**
-   * S5: pipe-delimited chunk files — one output file per partition ≙
-   * one `chunk<i>` per worker (`WorkerRunnable.java:75-80,202-216`),
-   * null rendered as literal `"null"`. Columns are rendered in the
-   * given order.
+   * S5: pipe-delimited chunk files, one `part-<pid>.txt` per non-empty
+   * partition ≙ one `chunk<i>` per worker (`WorkerRunnable.java:75-80,
+   * 202-216`), null as `"null"`. The directory is recreated first, so a
+   * replayed call replaces what an earlier attempt left. One job, no
+   * `_temporary/`, `_SUCCESS` or `.crc`. Tasks write with java.nio, so
+   * `path` is local (plain or `file:`): `local[n]` runs them in the driver.
    */
-  def writePipeChunks(df: DataFrame, cols: Seq[Column], path: String,
-                      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.select(CdcOps.pipeLine(cols).as("value"))
-      .write.mode(mode).text(path)
+  def writePipeChunks(df: DataFrame, cols: Seq[Column], path: String): Unit = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"writePipeChunks writes local files only, not $path")
+    val dir = uri.getPath
+    FileUtils.deleteDirectory(new java.io.File(dir))
+    Files.createDirectories(Paths.get(dir))
+    df.select(CdcOps.pipeLine(cols)).queryExecution.toRdd.foreachPartition {
+      rows =>
+        val task = TaskContext.get()
+        writeChunk(Paths.get(dir), task.partitionId(), task.taskAttemptId(),
+          rows.map(_.getUTF8String(0)))
+    }
+  }
+
+  /** One partition's lines into a hidden temp file, renamed over
+    * `part-<pid>.txt`: a reader sees a whole chunk or none, a retry
+    * replaces the earlier file, a failure leaves nothing. */
+  private[sinks] def writeChunk(dir: Path, partitionId: Int, attemptId: Long,
+                                lines: Iterator[UTF8String]): Unit =
+    if (lines.hasNext) {
+      val tmp = dir.resolve(s".part-$partitionId-$attemptId.tmp")
+      try {
+        val out = new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16)
+        try lines.foreach { l => l.writeTo(out); out.write('\n') }
+        finally out.close()
+        Files.move(tmp, dir.resolve(f"part-$partitionId%05d.txt"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      } catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+    }
 
   /**
    * Z-ordered parquet write — the ACTIONABLE half of

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.CdcOps
+import graft.sinks.Sinks
 import graft.util.Cols
 
 /**
@@ -20,9 +21,9 @@ import graft.util.Cols
  * per-worker chunk files all disappear into the engine: trigger
  * interval ≙ `sleepDuration`, source partitions ≙ `numberOfThread`,
  * checkpointed offsets ≙ the (previously unpersisted) `maxSeqID`
- * ledger. Each micro-batch lands as text files under `batch=<id>`, one
- * per partition of the window's `user_id` shuffle after adaptive
- * coalescing (a small batch writes one file), not one per worker.
+ * ledger. Each micro-batch lands under `batch=<id>` as one chunk file
+ * per non-empty partition of the window's `user_id` shuffle after
+ * adaptive coalescing (a small batch writes one file), not per worker.
  */
 object ExtractionPipeline {
 
@@ -73,18 +74,19 @@ object ExtractionPipeline {
   /**
    * One micro-batch of the extraction sink: enrich with the
    * transaction commit timestamp and land the pipe lines under
-   * `batch=<id>`. batchId-keyed OVERWRITE is what makes a replayed
-   * batch idempotent: after a mid-batch crash the restart re-runs the
-   * same batch id over the same checkpointed offset range and the
-   * overwrite replaces any partial output whole — no duplicate and no
+   * `batch=<id>` ([[graft.sinks.Sinks.writePipeChunks]]). Each chunk
+   * appears by atomic rename, whole or not at all, and the batchId-keyed
+   * directory is overwritten on every call: after a mid-batch crash the
+   * restart re-runs the same batch id over the same checkpointed offset
+   * range and replaces any partial output whole — no duplicate and no
    * missing line (the reference had no such story: a worker crash
    * mid-chunk lost or duplicated rows, SURVEY §3.4,
    * `CoordinatorRunnable.java:35-42`). [[ExactlyOnceSinkSpec]] kills a
    * batch after a partial write and proves the law.
    */
   def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
-    pipeLines(withCommitTs(batch))
-      .write.mode("overwrite").text(s"$outDir/batch=$batchId")
+    Sinks.writePipeChunks(withCommitTs(batch), lineFields,
+      s"$outDir/batch=$batchId")
 
   /**
    * Add `commit_ts` = the transaction's max `ts` within `batch`, as a
@@ -100,6 +102,7 @@ object ExtractionPipeline {
   /** Enriched change rows as the extraction's `line` column: the
     * [[pipeFormat]] fields followed by the commit timestamp. */
   def pipeLines(enriched: DataFrame): DataFrame =
-    enriched.select(CdcOps.pipeLine(
-      changeFields :+ Cols.epochUs(col("commit_ts"))).as("line"))
+    enriched.select(CdcOps.pipeLine(lineFields).as("line"))
+
+  private def lineFields = changeFields :+ Cols.epochUs(col("commit_ts"))
 }

@@ -1,8 +1,12 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
 
@@ -19,6 +23,76 @@ class SinksSpec extends SparkSpec {
     val parts = new java.io.File(dir).listFiles()
       .count(f => f.getName.startsWith("part-"))
     assert(parts == 2) // one chunk file per partition, like chunk<i>
+  }
+
+  /** Every file under `dir`, relative names, sorted. */
+  private def tree(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toVector.sorted
+    finally s.close()
+  }
+
+  test("writePipeChunks replaces a Spark text write whole, leaving only part- files") {
+    val dir = Files.createTempDirectory("sink").toString + "/chunks"
+    Seq("old1", "old2").toDF("value").repartition(2).write.text(dir)
+    val stale = java.nio.file.Paths.get(dir, "_temporary", "0", "part-x")
+    Files.createDirectories(stale.getParent)
+    Files.write(stale, "old3\n".getBytes(UTF_8))
+    assert(tree(dir).exists(_.endsWith("-c000.txt")), tree(dir))
+    assert(tree(dir).contains("_SUCCESS"), tree(dir))
+    assert(tree(dir).exists(_.endsWith(".crc")), tree(dir))
+
+    Sinks.writePipeChunks(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
+      Seq($"id", $"s"), dir)
+    assert(tree(dir).nonEmpty && tree(dir).forall(_.startsWith("part-")),
+      tree(dir))
+    assert(spark.read.text(dir).as[String].collect().sorted.toSeq ==
+      Seq("1|a", "2|b"))
+  }
+
+  test("writeChunk: a retried partition leaves one file with the retry's lines") {
+    val dir = Files.createTempDirectory("sink")
+    def lines(ls: String*) = ls.iterator.map(UTF8String.fromString)
+    Sinks.writeChunk(dir, 3, 7L, lines("a|1", "b|2"))
+    Sinks.writeChunk(dir, 3, 8L, lines("c|3"))
+    assert(tree(dir.toString) == Seq("part-00003.txt"))
+    assert(new String(Files.readAllBytes(dir.resolve("part-00003.txt")),
+      UTF_8) == "c|3\n")
+  }
+
+  test("writeChunk: a partition that throws leaves no chunk and no temp file") {
+    val dir = Files.createTempDirectory("sink")
+    val rows = Iterator.tabulate(5) { i =>
+      if (i == 3) throw new IllegalStateException("task died")
+      UTF8String.fromString(s"$i|x")
+    }
+    val e = intercept[IllegalStateException](Sinks.writeChunk(dir, 0, 1L, rows))
+    assert(e.getMessage == "task died")
+    assert(tree(dir.toString).isEmpty)
+  }
+
+  test("writePipeChunks: empty partitions write no file; the text read returns the lines") {
+    val dir = Files.createTempDirectory("sink").toString + "/sparse"
+    val df = spark.range(0, 3, 1, 8).toDF("id") // 8 slices, 5 of them empty
+    assert(df.rdd.getNumPartitions == 8)
+    Sinks.writePipeChunks(df, Seq($"id", lit(null)), dir)
+    assert(tree(dir).length == 3, tree(dir))
+    assert(spark.read.text(dir).as[String].collect().sorted.toSeq ==
+      Seq("0|null", "1|null", "2|null"))
+    val none = Files.createTempDirectory("sink")
+    Sinks.writeChunk(none, 0, 1L, Iterator.empty)
+    assert(tree(none.toString).isEmpty)
+  }
+
+  test("writePipeChunks takes a file: URI and rejects other schemes") {
+    val dir = Files.createTempDirectory("sink").resolve("uri")
+    Sinks.writePipeChunks(Seq(1L).toDF("id"), Seq($"id"), dir.toUri.toString)
+    assert(spark.read.text(dir.toString).as[String].collect().toSeq == Seq("1"))
+    val e = intercept[IllegalArgumentException](Sinks.writePipeChunks(
+      Seq(1L).toDF("id"), Seq($"id"), "hdfs://localhost:1/graft/chunks"))
+    assert(e.getMessage.contains("hdfs"), e.getMessage)
   }
 
   test("writePipeCsv renders null as literal null") {

@@ -103,8 +103,12 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # optional name filter (argv[3:]) for single-query dev iteration;
+    # a named query without a dump dir is skipped, like any absent dir
+    only = set(sys.argv[3:])
     names = [n for n in sorted(os.listdir(out_dir))
-             if os.path.isdir(os.path.join(out_dir, n))]
+             if os.path.isdir(os.path.join(out_dir, n))
+             and (not only or n in only)]
     n_ok = n_bad = 0
     # One query per task, each worker with its own connection; imap
     # yields in submission order, so the lines print in name order.
