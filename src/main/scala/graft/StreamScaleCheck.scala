@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.{ExtractionPipeline, FileChangeLogStream, GapMonitor, StreamingNearDup}
+import graft.streaming.{ChangeLogStream, ExtractionPipeline, GapMonitor, StreamingNearDup}
 
 /**
  * Dev-only STREAMING scale probe (r8 verdict item 2) — the batch
@@ -26,9 +26,9 @@ import graft.streaming.{ExtractionPipeline, FileChangeLogStream, GapMonitor, Str
  *
  * Components: [[StreamingNearDup]] (LSH band ownership,
  * event-time-timeout state), [[GapMonitor]] (offset-gap tracking,
- * O(maxTracked) state per source), and the [[FileChangeLogStream]]
- * extraction (admission-controlled parquet micro-batches through the
- * pipe-format projection — the reference's whole job,
+ * O(maxTracked) state per source), and the [[ChangeLogStream]]
+ * extraction over parquet segments (admission-controlled micro-batches
+ * through the pipe-format projection — the reference's whole job,
  * `CoordinatorRunnable.java:75-94`, at scaled rates).
  *
  * Usage: `runMain graft.StreamScaleCheck
@@ -473,7 +473,7 @@ object StreamScaleCheck {
   private def runExtract(spark: SparkSession, mult: Int,
                          segDir: String): Unit = {
     val q = ExtractionPipeline.pipeFormat(
-        spark.readStream.format(FileChangeLogStream.FormatName)
+        spark.readStream.format(ChangeLogStream.FormatName)
           .option("path", segDir)
           .option("maxEventsPerTrigger", mult * 2000L)
           .option("numPartitions", 8)

@@ -2,7 +2,7 @@ package graft.app
 
 import graft.model.EventGroups
 import graft.sources.ChangeLogSource
-import graft.streaming.{ChangeEvent, ChangeLogBuffers, ExtractionPipeline, FileChangeLogStream, StalenessListener}
+import graft.streaming.{ChangeEvent, ChangeLogBuffers, ChangeLogStream, ExtractionPipeline, StalenessListener}
 import graft.util.Cols
 
 /**
@@ -57,21 +57,9 @@ object Main {
     else math.min(
       ChangeLogSource.table(spark, sfDir, "events").count(),
       sys.props.getOrElse("graft.feederMaxRows", "1000000").toLong)
-    // `stream` is the (possibly table-filtered) extraction input;
-    // `monitorStream` is a second, UNFILTERED reader of the same log —
-    // a filtered stream legitimately has event_id holes, so feeding it
-    // to the gap monitor would report spurious gaps for any subgroup
-    // run. Each streaming query checkpoints its own offsets, so two
-    // readers over one log are independent.
-    val (stream, monitorStream) = sourceDir match {
-      case Some(d) =>
-        val r = spark.readStream.format(FileChangeLogStream.FormatName)
-          .option("path", d)
-        val filtered = (if (tables != EventGroups.All)
-          r.option("tables", tables.mkString(",")) else r).load()
-        val unfiltered = spark.readStream
-          .format(FileChangeLogStream.FormatName).option("path", d).load()
-        (filtered, unfiltered)
+    // The log: a segment directory as is, or a buffer the feeder fills.
+    val (logOption, logName) = sourceDir match {
+      case Some(d) => "path" -> d
       case None =>
         // Feeder: replay the events table into the buffer in batches.
         // Dev harness only — the collect() is bounded (first
@@ -102,11 +90,21 @@ object Main {
         }, "changelog-feeder")
         feeder.setDaemon(true)
         feeder.start()
-        (ExtractionPipeline.readChangeLog(spark, bufName, Some(tables),
-          numPartitions = partitions),
-         ExtractionPipeline.readChangeLog(spark, bufName, None,
-          numPartitions = partitions))
+        "buffer" -> bufName
     }
+    def open(filter: Seq[String]): org.apache.spark.sql.DataFrame = {
+      val r = spark.readStream.format(ChangeLogStream.FormatName)
+        .option(logOption, logName).option("numPartitions", partitions)
+      (if (filter != EventGroups.All) r.option("tables", filter.mkString(","))
+       else r).load()
+    }
+    // `stream` is the (possibly table-filtered) extraction input;
+    // `monitorStream` is a second, UNFILTERED reader of the same log —
+    // a filtered stream legitimately has event_id holes, so feeding it
+    // to the gap monitor would report spurious gaps for any subgroup
+    // run. Each streaming query checkpoints its own offsets, so two
+    // readers over one log are independent.
+    val (stream, monitorStream) = (open(tables), open(EventGroups.All))
     val query = ExtractionPipeline.start(stream, outDir,
       s"$outDir-checkpoint", triggerMs)
 

@@ -17,29 +17,52 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.ChangeLogSource.{splitRange, OffsetRange}
 
 /**
- * DataSource V2 micro-batch change-log source — the Spark-native
- * re-expression of the reference's coordinator/worker machinery
- * (SURVEY.md §3.1):
+ * The DataSource V2 micro-batch change-log source: one offset contract
+ * over two logs. It is the Spark-native re-expression of the
+ * reference's coordinator/worker machinery (SURVEY.md §3.1):
  *
  *  - `latestOffset` IS the coordinator's poll `max(event_id)`
  *    (reference `CoordinatorRunnable.java:84-86`), with admission
  *    control standing in for the bounded-queue back-pressure
  *    (`Client.java:17`; option `maxEventsPerTrigger`).
- *  - `planInputPartitions` carves the advance into half-open
- *    `(min, max]` ranges — the reference's `Task` objects
- *    (`Task.java:2-16`) — one `InputPartition` per worker
- *    (`numPartitions` option ≙ `numberOfThread`).
- *  - Offsets serialize into the streaming checkpoint: restart resumes
- *    exactly where it stopped — the durability the reference lacks
- *    (SURVEY §3.4 "no persistence of offsets").
+ *  - `planInputPartitions` carves the advance into `numPartitions`
+ *    half-open `(min, max]` ranges (`splitRange`) — the reference's
+ *    `Task` objects (`Task.java:2-16`), `numPartitions` ≙
+ *    `numberOfThread`.
+ *  - Offsets serialize into the streaming checkpoint as a bare
+ *    `event_id`: restart resumes exactly where it stopped — the
+ *    durability the reference lacks (SURVEY §3.4 "no persistence of
+ *    offsets").
  *  - The `tables` option pushes the IN-list filter into the source
  *    (reference `WorkerRunnable.java:94`).
  *
- * The backing log is an in-process append-only [[ChangeLogBuffer]]
- * (tests feed it from the driver `events` table — the PostgreSQL
- * stand-in). A production deployment backs the same offset contract
- * with `max(event_id)` pushdown over JDBC/parquet; only
- * [[ChangeLogPartitionReader]] changes.
+ * Only the storage under the contract varies ([[ChangeLog]]), picked
+ * by which option names the log:
+ *
+ *  - `buffer`: an in-process append-only [[ChangeLogBuffer]]
+ *    ([[BufferLog]]; the live tail and the tests feed it from the
+ *    driver `events` table, the PostgreSQL stand-in). Each partition
+ *    is one `slice`.
+ *  - `path`: a directory of immutable parquet segments, the production
+ *    shape ([[SegmentLog]] in `FileChangeLogStream.scala`). Offsets come
+ *    from footer statistics; each partition reads one (sub-range ×
+ *    segment).
+ *
+ * | option                | default   | meaning                               |
+ * |-----------------------|-----------|---------------------------------------|
+ * | `buffer` \| `path`    | `buffer`  | the log: a buffer name or a directory |
+ * | `numPartitions`       | 4         | `(min, max]` sub-ranges per batch     |
+ * | `maxEventsPerTrigger` | unbounded | admission cap on ids per batch        |
+ * | `tables`              | all       | comma-separated `event_type` IN-list  |
+ * | `startAt`             | earliest  | `earliest` or `latest` (see below)    |
+ *
+ * `buffer` defaults to the name `default`; naming both logs is an
+ * error. `startAt` is consulted only when the checkpoint holds no
+ * offset yet: `earliest` replays the log, `latest` skips its history
+ * like the reference coordinator (`CoordinatorRunnable.java:35-42`).
+ * A log that holds no event yet sits at [[ChangeLogStream.BeforeAnyId]],
+ * so a stream started before the first append still reads that first
+ * event.
  */
 object ChangeLogStream {
   /** Change-log record schema (events stand-in, FIXTURES.md §B). */
@@ -52,6 +75,11 @@ object ChangeLogStream {
     StructField("props", StringType, nullable = true)))
 
   val FormatName: String = classOf[ChangeLogTableProvider].getName
+
+  /** The offset of an empty log: below every id. Change-log ids are
+    * non-negative (PostgreSQL's bigserial; the `events` fixtures start
+    * at 0). */
+  val BeforeAnyId: Long = -1L
 }
 
 /** One change row (ts in epoch micros). */
@@ -75,15 +103,13 @@ final class ChangeLogBuffer {
     }
   }
 
-  def maxId: Long = synchronized {
-    if (events.isEmpty) 0L else events.last.eventId
+  /** (first, last) `event_id` in the log; `None` while it is empty. */
+  def span: Option[(Long, Long)] = synchronized {
+    if (events.isEmpty) None else Some((events.head.eventId, events.last.eventId))
   }
 
-  /** Offset just below the first event — the `earliest` start point
-    * (offsets are exclusive lower bounds of `(min, max]` ranges). */
-  def beforeFirstId: Long = synchronized {
-    if (events.isEmpty) 0L else events.head.eventId - 1
-  }
+  /** Last `event_id`, or [[ChangeLogStream.BeforeAnyId]] while empty. */
+  def maxId: Long = span.fold(ChangeLogStream.BeforeAnyId)(_._2)
 
   /** Half-open (min, max] slice, optionally filtered to table set, in
     * O(log n + k) for k events in the range: a binary search finds the
@@ -119,6 +145,26 @@ final case class ChangeLogOffset(maxId: Long) extends Offset {
   override def json(): String = maxId.toString
 }
 
+/**
+ * The storage under [[ChangeLogMicroBatchStream]]'s one offset
+ * contract: where the log's ids span, and which input partitions read
+ * a batch's `(min, max]` sub-ranges.
+ */
+trait ChangeLog {
+  /** (first, last) `event_id` in the log; `None` while it is empty. */
+  def span: Option[(Long, Long)]
+
+  /** Input partitions that together read exactly `ranges`. */
+  def partitions(ranges: Seq[OffsetRange],
+                 tables: Option[Set[String]]): Seq[InputPartition]
+}
+
+/** A change-log partition builds its own reader, so one factory serves
+  * every [[ChangeLog]]. */
+trait ChangeLogPartition extends InputPartition {
+  def reader(): PartitionReader[InternalRow]
+}
+
 class ChangeLogTableProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     ChangeLogStream.Schema
@@ -138,39 +184,40 @@ class ChangeLogTable extends Table with SupportsRead {
 
 class ChangeLogScanBuilder(options: CaseInsensitiveStringMap)
     extends ScanBuilder with Scan {
-  private val bufferName = options.getOrDefault("buffer", "default")
+  private val log: ChangeLog =
+    (Option(options.get("buffer")), Option(options.get("path"))) match {
+      case (Some(_), Some(_)) => throw new IllegalArgumentException(
+        "options 'buffer' and 'path' both name a log; give one")
+      case (_, Some(dir)) => new SegmentLog(dir)
+      case (name, None) => new BufferLog(name.getOrElse("default"))
+    }
   private val numPartitions = options.getInt("numPartitions", 4)
   private val maxEventsPerTrigger: Long =
     options.getLong("maxEventsPerTrigger", Long.MaxValue)
   private val tables: Option[Set[String]] =
     Option(options.get("tables")).map(_.split(",").map(_.trim).toSet)
-  // "earliest" (default; replay the whole log) or "latest" (skip
-  // history — the reference's behavior, `CoordinatorRunnable.java:35-42`)
   private val startAt = options.getOrDefault("startAt", "earliest")
 
   override def build(): Scan = this
   override def readSchema(): StructType = ChangeLogStream.Schema
   override def description(): String =
-    s"graft_changelog(buffer=$bufferName, tables=${tables.getOrElse("*")})"
+    s"graft_changelog($log, tables=${tables.getOrElse("*")})"
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangeLogMicroBatchStream(bufferName, numPartitions,
-      maxEventsPerTrigger, tables, startAt)
+    new ChangeLogMicroBatchStream(log, numPartitions, maxEventsPerTrigger,
+      tables, startAt)
 }
 
-class ChangeLogMicroBatchStream(bufferName: String, numPartitions: Int,
+class ChangeLogMicroBatchStream(log: ChangeLog, numPartitions: Int,
                                 maxEventsPerTrigger: Long,
                                 tables: Option[Set[String]],
                                 startAt: String = "earliest")
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private def buffer = ChangeLogBuffers.get(bufferName)
-
-  // Coordinator init (`CoordinatorRunnable.java:35-42` starts at live
-  // max): "latest" reproduces that; "earliest" replays the log. Only
-  // consulted when the checkpoint has no committed offset yet.
-  override def initialOffset(): Offset =
-    ChangeLogOffset(
-      if (startAt == "latest") buffer.maxId else buffer.beforeFirstId)
+  override def initialOffset(): Offset = ChangeLogOffset(log.span match {
+    case None => ChangeLogStream.BeforeAnyId
+    case Some((_, last)) if startAt == "latest" => last
+    case Some((first, _)) => first - 1
+  })
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
@@ -181,31 +228,31 @@ class ChangeLogMicroBatchStream(bufferName: String, numPartitions: Int,
     else ReadLimit.maxRows(maxEventsPerTrigger)
 
   /** Poll tick: observe max(event_id), capped by admission control —
-    * back-pressure ≙ the reference's bounded queue. */
+    * back-pressure ≙ the reference's bounded queue. Never moves below
+    * `start`, so an empty log stays where it started. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startId = start.asInstanceOf[ChangeLogOffset].maxId
-    val live = buffer.maxId
-    val capped = limit match {
-      case r: ReadMaxRows => math.min(live, startId + r.maxRows())
-      case _ =>
-        if (maxEventsPerTrigger == Long.MaxValue) live
-        else math.min(live, startId + maxEventsPerTrigger)
+    val live = log.span.fold(startId)(_._2)
+    val cap = limit match {
+      case r: ReadMaxRows => r.maxRows()
+      case _ => maxEventsPerTrigger
     }
-    ChangeLogOffset(math.max(capped, startId))
+    ChangeLogOffset(
+      if (live <= startId) startId
+      else if (live - startId <= cap) live
+      else startId + cap)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[ChangeLogOffset].maxId
     val hi = end.asInstanceOf[ChangeLogOffset].maxId
     if (hi <= lo) Array.empty
-    else splitRange(OffsetRange(lo, hi), numPartitions)
-      .map(r => ChangeLogInputPartition(bufferName, r.min, r.max, tables)
-        : InputPartition)
+    else log.partitions(splitRange(OffsetRange(lo, hi), numPartitions), tables)
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangeLogPartitionReaderFactory
+    new ChangeLogReaderFactory
 
   override def deserializeOffset(json: String): Offset =
     ChangeLogOffset(json.trim.toLong)
@@ -215,21 +262,29 @@ class ChangeLogMicroBatchStream(bufferName: String, numPartitions: Int,
   override def stop(): Unit = ()
 }
 
-final case class ChangeLogInputPartition(bufferName: String, min: Long,
-                                         max: Long, tables: Option[Set[String]])
-    extends InputPartition
+class ChangeLogReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition.asInstanceOf[ChangeLogPartition].reader()
+}
 
-class ChangeLogPartitionReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ChangeLogInputPartition]
-    new ChangeLogPartitionReader(p)
-  }
+/** The in-process backend: one [[ChangeLogBuffer.slice]] per sub-range. */
+final class BufferLog(name: String) extends ChangeLog {
+  override def span: Option[(Long, Long)] = ChangeLogBuffers.get(name).span
+  override def partitions(ranges: Seq[OffsetRange],
+                          tables: Option[Set[String]]): Seq[InputPartition] =
+    ranges.map(r => BufferPartition(name, r.min, r.max, tables))
+  override def toString: String = s"buffer=$name"
+}
+
+final case class BufferPartition(bufferName: String, min: Long, max: Long,
+                                 tables: Option[Set[String]])
+    extends ChangeLogPartition {
+  override def reader(): PartitionReader[InternalRow] = new BufferReader(this)
 }
 
 /** Worker-equivalent: materializes one `(min, max]` task
   * (`WorkerRunnable.java:93-98,117-119`), local-mode in-memory read. */
-class ChangeLogPartitionReader(p: ChangeLogInputPartition)
-    extends PartitionReader[InternalRow] {
+class BufferReader(p: BufferPartition) extends PartitionReader[InternalRow] {
   private val rows = ChangeLogBuffers.get(p.bufferName)
     .slice(OffsetRange(p.min, p.max), p.tables).iterator
   private var current: ChangeEvent = _

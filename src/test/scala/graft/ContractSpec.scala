@@ -55,6 +55,19 @@ class ContractSpec extends AnyFunSuite {
       s"files building their own SparkSession: ${builders - "GraftSession.scala"}")
   }
 
+  test("the main sources hold one change-log source: one TableProvider, one MicroBatchStream") {
+    // one offset contract over every log; a second stream copy drifts
+    // (an empty-log start and numPartitions once differed between two)
+    val src = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => java.nio.file.Files.readString(p)).mkString("\n")
+    for (iface <- Seq("MicroBatchStream", "TableProvider")) {
+      val n = s"extends $iface\\b".r.findAllMatchIn(src).size
+      assert(n == 1, s"$n classes extend $iface")
+    }
+  }
+
   test("queries without an oracle are the known rows-only set") {
     // anything missing an oracle silently downgrades to a rows-only
     // check — adding a query without one must be a DELIBERATE entry

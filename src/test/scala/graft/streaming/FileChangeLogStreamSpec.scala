@@ -3,27 +3,32 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.SparkSpec
-
-class FileChangeLogStreamSpec extends SparkSpec {
+/** The contract over parquet segments, plus the segment-specific
+  * reads: nanos timestamps, null `props`, one large segment split. */
+class FileChangeLogStreamSpec extends ChangeLogContract {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("fcl").toString
-
-  private def writeSegment(dir: String, ids: Range, baseMs: Long): Unit =
-    FileChangeLogStream.writeSegment(
-      ids.map(i => (i.toLong, new Timestamp(baseMs + i * 1000L), i.toLong % 5,
-          if (i % 2 == 0) "click" else "purchase", i + 0.5, s"p$i"))
+  override protected def newLog(): Log = new Log {
+    private val dir = tmp()
+    override def option: (String, String) = "path" -> dir
+    override def append(events: Seq[ChangeEvent]): Unit =
+      FileChangeLogStream.writeSegment(events.map(e =>
+          (e.eventId, new Timestamp(e.tsMicros / 1000L), e.userId,
+            e.eventType, e.value, e.props))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
-      dir)
+        dir)
+  }
 
   test("streams the driver's nanos-timestamp parquet byte-for-byte") {
     val dir = tmp()
     Files.copy(Paths.get("/root/testdata/sf0.001/events.parquet"),
       Paths.get(dir, "seg-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val q = spark.readStream.format(FileChangeLogStream.FormatName)
+    val q = spark.readStream.format(ChangeLogStream.FormatName)
       .option("path", dir).load()
       .writeStream.format("memory").queryName("fcl_ns")
       .option("checkpointLocation", tmp()).start()
@@ -38,25 +43,24 @@ class FileChangeLogStreamSpec extends SparkSpec {
     assert(got == exp) // same rows, same micros truncation as batch path
   }
 
-  test("maxIdsPerPartition splits a large segment into covering sub-ranges") {
-    val dir = tmp()
-    writeSegment(dir, 0 until 500, 1700000000000L)
-    // plan level: one 500-id segment must yield ceil(500/64) tasks
-    val stream = new FileChangeLogMicroBatchStream(dir, Long.MaxValue,
-      None, "earliest", maxIdsPerPartition = 64L)
+  test("numPartitions splits a large segment into covering sub-ranges") {
+    val log = newLog()
+    log.append((0L until 500L).map(ev(_)))
+    // plan level: one 500-id segment must yield 8 tasks
+    val stream = new ChangeLogScanBuilder(new CaseInsensitiveStringMap(
+        Map(log.option, "numPartitions" -> "8").asJava))
+      .toMicroBatchStream(tmp())
     val parts = stream
       .planInputPartitions(ChangeLogOffset(-1L), ChangeLogOffset(499L))
-      .map(_.asInstanceOf[FileChangeLogPartition])
+      .map(_.asInstanceOf[SegmentPartition])
     assert(parts.length == 8)
     // half-open ranges tile (-1, 499] with no gap or overlap
     val sorted = parts.sortBy(_.min)
     assert(sorted.head.min == -1L && sorted.last.max == 499L)
     assert(sorted.sliding(2).forall {
       case Array(a, b) => a.max == b.min; case _ => true })
-    // data level: split read returns exactly the same rows
-    val q = spark.readStream.format(FileChangeLogStream.FormatName)
-      .option("path", dir).option("maxIdsPerPartition", 64)
-      .load()
+    // data level: the split read returns exactly the same rows
+    val q = read(log, "numPartitions" -> 8)
       .writeStream.format("memory").queryName("fcl_split")
       .option("checkpointLocation", tmp()).start()
     try q.processAllAvailable() finally q.stop()
@@ -64,42 +68,6 @@ class FileChangeLogStreamSpec extends SparkSpec {
       .agg(count(lit(1)), countDistinct($"event_id"), max($"event_id"))
       .as[(Long, Long, Long)].head()
     assert(got == ((500L, 500L, 499L)))
-  }
-
-  test("incremental segments + restart: exactly once, footer-stat offsets") {
-    val dir = tmp()
-    val ckpt = tmp()
-    val out = tmp()
-    writeSegment(dir, 0 until 40, 1700000000000L)
-    def run(): Unit = {
-      val q = spark.readStream.format(FileChangeLogStream.FormatName)
-        .option("path", dir).load()
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    writeSegment(dir, 40 until 90, 1700000000000L)
-    run()
-    val ids = spark.read.parquet(out).select("event_id").as[Long].collect()
-    assert(ids.sorted.toSeq == (0L until 90L))
-    assert(ids.length == ids.distinct.length)
-  }
-
-  test("admission control + table filter on the file source") {
-    val dir = tmp()
-    writeSegment(dir, 0 until 60, 1700000000000L)
-    val q = spark.readStream.format(FileChangeLogStream.FormatName)
-      .option("path", dir).option("maxEventsPerTrigger", 20)
-      .option("tables", "click").load()
-      .writeStream.format("memory").queryName("fcl_cap")
-      .option("checkpointLocation", tmp()).start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("fcl_cap").select("event_id").as[Long].collect()
-      assert(got.sorted.toSeq == (0L until 60L by 2))
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
-    } finally q.stop()
   }
 
   test("null props stream through the extraction pipeline as `null`") {
@@ -115,7 +83,7 @@ class FileChangeLogStreamSpec extends SparkSpec {
     FileChangeLogStream.writeSegment(
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       dir)
-    val stream = spark.readStream.format(FileChangeLogStream.FormatName)
+    val stream = spark.readStream.format(ChangeLogStream.FormatName)
       .option("path", dir).load()
     val q = ExtractionPipeline.start(stream, out, tmp(), triggerMs = 0L)
     try q.processAllAvailable() finally q.stop()

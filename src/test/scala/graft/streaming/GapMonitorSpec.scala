@@ -56,7 +56,7 @@ class GapMonitorSpec extends SparkSpec {
       dir)
     seg(0 until 40)
     seg(45 until 80) // ids 40..44 never landed
-    val offsets = spark.readStream.format(FileChangeLogStream.FormatName)
+    val offsets = spark.readStream.format(ChangeLogStream.FormatName)
       .option("path", dir).load()
       .select(org.apache.spark.sql.functions.lit("t").as("source"),
         $"event_id".as("offset"))

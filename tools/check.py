@@ -92,9 +92,9 @@ def compare(job):
             shown += 1
     if sn != on:
         sset, oset = set(srows), set(orows)
-        for r in list(sset - oset)[:2]:
+        for r in sorted(sset - oset)[:2]:
             out.append(f"  only-spark:  {r}")
-        for r in list(oset - sset)[:2]:
+        for r in sorted(oset - sset)[:2]:
             out.append(f"  only-oracle: {r}")
     return out, "bad"
 
