@@ -29,6 +29,10 @@ object Main {
     val group = sys.props.getOrElse("graft.tables", "all")
     val sfDir = sys.props.getOrElse("graft.sfDir", "/root/testdata/sf0.001")
     val outDir = sys.props.getOrElse("graft.outDir", "target/extract_out")
+    // Feeder cap, buffer mode only: the feeder collects at most this
+    // many offsets (default 1M ≈ sf1), so a huge table can't OOM the
+    // driver; production runs use -Dgraft.sourceDir (no collect).
+    val feederMax = sys.props.getOrElse("graft.feederMaxRows", "1000000").toInt
     val tables = group match {
       case "all" => EventGroups.All
       case "first" => EventGroups.First
@@ -50,24 +54,14 @@ object Main {
     val listener = new StalenessListener()
     spark.streams.addListener(listener)
 
-    // Feeder cap only binds in buffer mode (file mode streams the
-    // source dir; nothing is collected there).
-    val total = if (sourceDir.isDefined)
-      ChangeLogSource.table(spark, sfDir, "events").count()
-    else math.min(
-      ChangeLogSource.table(spark, sfDir, "events").count(),
-      sys.props.getOrElse("graft.feederMaxRows", "1000000").toLong)
+    val events = ChangeLogSource.table(spark, sfDir, "events").count()
+    val total = if (sourceDir.isDefined) events else math.min(events, feederMax)
     // The log: a segment directory as is, or a buffer the feeder fills.
     val (logOption, logName) = sourceDir match {
       case Some(d) => "path" -> d
       case None =>
-        // Feeder: replay the events table into the buffer in batches.
-        // Dev harness only — the collect() is bounded (first
-        // `graft.feederMaxRows` offsets, default 1M ≈ sf1) so pointing
-        // the demo at a huge table can't OOM the driver; production
-        // runs use -Dgraft.sourceDir (file-backed source, no collect).
-        val feederMax =
-          sys.props.getOrElse("graft.feederMaxRows", "1000000").toInt
+        // Feeder: replay the events table into the buffer in batches,
+        // the first `feederMax` offsets only (dev harness).
         // ts converts to epoch micros INSIDE the plan (Cols.epochUs is
         // NTZ-safe); a Row.getTimestamp here would ClassCastException
         // on TIMESTAMP_NTZ parquet, which surfaces as LocalDateTime

@@ -50,17 +50,6 @@ object CdcOps {
     log.join(broadcast(dim), txidCol)
 
   /**
-   * Group transactions by commit timestamp with set semantics —
-   * the reference's `Map<Timestamp, HashSet<Long>>`
-   * (`WorkerRunnable.java:37,58,137-144`). Emitted sorted and joined to
-   * a string so results are deterministic across partition orders.
-   */
-  def txidsByCommitTs(log: DataFrame, txidCol: String = "user_id",
-                      tsCol: String = "ts"): DataFrame =
-    log.groupBy(col(tsCol).as("commit_ts"))
-      .agg(sort_array(collect_set(col(txidCol))).as("txids"))
-
-  /**
    * Freshness watermark `uptodate` = max commit timestamp fully
    * extracted (`WorkerRunnable.java:145-150`). A single partial-agg max:
    * each partition contributes one value, no data movement beyond that.

@@ -55,14 +55,6 @@ object Multimodal {
         concat(ck, lit(":"), i.cast("string"))) % 20001L - 10000L)
   }
 
-  /** STUB feature extraction: the quantized lattice scaled to
-    * `dims` pseudo-embedding floats in [-1, 1] — the plumbing for
-    * "model inference over binary columns" with a deterministic
-    * kernel. */
-  def extractFeaturesStub(payload: Column, dims: Int = 16): Column =
-    transform(quantizedFeaturesStub(payload, dims),
-      q => (q.cast("double") / 10000.0).cast("float"))
-
   /** STUB resize plan: target dims + scale factors vs decoded dims. */
   def resizeStub(decoded: Column, targetW: Int, targetH: Int): Column =
     struct(lit(targetW).as("width"), lit(targetH).as("height"),

@@ -946,28 +946,6 @@ object TextOps {
       .select(col("left_sym"), col("right_sym"))
       .collect().toSeq.map(r => (r.getString(0), r.getString(1))))
 
-  /** Persist a trained tokenizer as an ordered merge table — one tiny
-    * parquet file (train once, serve from ANY later session/cluster;
-    * a real pipeline ships the tokenizer with the dataset card). */
-  def bpeSave(spark: org.apache.spark.sql.SparkSession, model: BpeModel,
-              path: String): Unit = {
-    import spark.implicits._
-    model.merges.zipWithIndex
-      .map { case ((a, b), i) => (i.toLong + 1L, a, b) }
-      .toDF("merge_round", "left_sym", "right_sym")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Load a tokenizer persisted by [[bpeSave]] — merge order restored
-    * from `merge_round` (application order IS the model). */
-  def bpeLoad(spark: org.apache.spark.sql.SparkSession,
-              path: String): BpeModel =
-    BpeModel(spark.read.parquet(path)
-      .orderBy(col("merge_round"))
-      .select(col("left_sym"), col("right_sym"))
-      .collect().toSeq.map(r => (r.getString(0), r.getString(1))))
-
   /** Unsigned UTF-8 byte order — Spark's (and DuckDB's) binary string
     * ordering, so driver-side tie-breaks match the engine's exactly
     * (UTF-16 `compareTo` diverges for supplementary-plane text). */

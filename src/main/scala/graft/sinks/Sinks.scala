@@ -6,16 +6,17 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CdcOps
 import graft.streaming.StalenessListener
 
 /**
- * Batch sinks mirroring the reference's outputs (SURVEY.md §2.1 S5/S6),
- * committed by atomic rename (pipe chunks) or Spark's file committers
- * (the rest) instead of per-row `flush()` (`WorkerRunnable.java:211`).
+ * The extractor's two outputs, mirroring the reference's (SURVEY.md
+ * §2.1 S5/S6): the pipe-delimited chunk files every micro-batch lands
+ * through, committed by atomic rename instead of per-row `flush()`
+ * (`WorkerRunnable.java:211`), and the staleness/throughput CSV.
  */
 object Sinks {
 
@@ -59,51 +60,6 @@ object Sinks {
     }
 
   /**
-   * Z-ordered parquet write — the ACTIONABLE half of
-   * [[graft.operators.Layout.zorderLayout]]'s report: rows are
-   * range-partitioned on their Morton code into `2^fileBits` files
-   * and locally sorted by the code, so every output file's min/max
-   * column statistics expose a BOUNDED rectangle in (x, y) space and
-   * a reader's range predicate on EITHER dimension prunes files
-   * (Delta/Iceberg `OPTIMIZE ZORDER BY`, as a plain parquet write).
-   *
-   * Scale shape: the code is a codegen'd projection;
-   * `repartitionByRange` samples the code distribution (balanced
-   * files under skew); the local sort is per-partition. One shuffle —
-   * the same cost as any clustering write.
-   */
-  def writeZOrdered(df: DataFrame, xCol: Column, yCol: Column,
-                    path: String, fileBits: Int = 6,
-                    mode: SaveMode = SaveMode.Overwrite): Unit = {
-    // dims are mortonKey's fixed 16-bit contract (coordinates wrap
-    // through its 0xFFFF mask); fileBits capped so the Int shift
-    // can't wrap (1 << 31 is negative, 1 << 32 is 1)
-    require(fileBits >= 1 && fileBits <= 30, s"fileBits=$fileBits")
-    df.withColumn("__z", graft.operators.Layout.mortonKey(xCol, yCol))
-      .repartitionByRange(1 << fileBits, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(mode).parquet(path)
-  }
-
-  /** S5 (generic): `|`-separated CSV of all columns, headerless —
-    * byte-compatible with the chunk format for flat schemas. */
-  def writePipeCsv(df: DataFrame, path: String,
-                   mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("sep", "|").option("header", "false")
-      .option("nullValue", "null").csv(path)
-
-  /** The real analytical sink: partitioned parquet (what a 100 TB
-    * pipeline lands; the pipe format is for reference fidelity). */
-  def writeParquet(df: DataFrame, path: String,
-                   partitionBy: Seq[String] = Nil,
-                   mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
-  }
-
-  /**
    * S6: the metric CSVs (`staleness_*`, `task_processing_time_*`,
    * `CoordinatorRunnable.java:53-64`; `QueryRequestRunnable.java:19-27`)
    * collapse to one queryable frame from the listener.
@@ -116,259 +72,4 @@ object Sinks {
         col("batchDurationMs"))
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /**
-   * Incremental mirror compaction with dynamic partition overwrite —
-   * the 100 TB mirror-maintenance pattern: a change batch touches a
-   * handful of the mirror's partitions; read ONLY those (partition
-   * pruning against the batch's partition values), fold the batch in
-   * with the delete-aware mirror upsert, and rewrite ONLY those
-   * partitions (`partitionOverwriteMode=dynamic` replaces exactly the
-   * partitions present in the written frame). Untouched partition
-   * files are never read or rewritten — per-batch cost is
-   * O(touched partitions + batch), not O(mirror).
-   *
-   * The touched-partition values are collected to the driver: that is
-   * partition METADATA (bounded by the partition count, the same list
-   * the committer itself materializes), not data — the one place a
-   * driver-side collect is the correct shape.
-   *
-   * Full-partition deletes (the one edge dynamic overwrite cannot
-   * serve — it replaces only partitions PRESENT in the written frame)
-   * go through a DELETION-MANIFEST sidecar: a tiny tombstone parquet
-   * under `_graft_deleted_partitions/` (underscore-prefixed, so plain
-   * parquet readers of the mirror root never list it) holding the
-   * string-rendered partition values that are logically dropped.
-   * [[readMirror]] honors it; a later batch that re-inserts rows into
-   * a dropped partition un-drops it (the manifest entry is removed and
-   * the partition folds from EMPTY, never from its stale files). This
-   * is the Delta/Iceberg deletion-log idea at minimum viable size.
-   * Crash window (documented, same class as the data write itself,
-   * which is also not atomic across partitions): the data write lands
-   * before the manifest update, so a crash between the two leaves a
-   * drained partition's stale files VISIBLE (and a revived one hidden)
-   * until the batch retries — retrying the batch is the recovery, as
-   * for any partial batch. The kill-point specs drive a crash through
-   * the `faultPoint` seam in both directions and prove the retry
-   * converges; the manifest write ITSELF is atomic (versioned
-   * last-wins snapshots, [[writeDeletionManifest]]), so a crash can
-   * delay the manifest but never lose it.
-   */
-  def compactMirror(spark: SparkSession, mirrorDir: String,
-                    changes: DataFrame, partCol: String,
-                    keyCol: String = "user_id", tsCol: String = "ts",
-                    offsetCol: String = "event_id",
-                    actionCol: String = "action",
-                    maxTouchedPartitions: Int = 100000,
-                    faultPoint: String => Unit = _ => ()): Unit = {
-    // partition values are compared STRING-RENDERED throughout (the
-    // same rendering the partition directory names use): the mirror
-    // read-back may re-infer a narrower type than the writer's (long
-    // columns come back int), and typed driver-side equality would
-    // silently miss across that gap. The cast-to-string filters still
-    // partition-prune — pruning evaluates the predicate over the
-    // partition-values row, casts included.
-    val touched = changes.select(partStr(col(partCol))).distinct()
-      .limit(maxTouchedPartitions + 1)
-      .collect().map(_.getString(0)).toSeq
-    // The collect above is partition METADATA, bounded by design — but
-    // a pathological batch touching every partition of a huge mirror
-    // must degrade LOUDLY (and before materializing the list), not as
-    // a driver OOM. 100k values ≈ single-digit MB; a batch past that
-    // is a full-mirror rewrite, which is not this operator's job.
-    require(touched.size <= maxTouchedPartitions,
-      s"compactMirror: batch touches > $maxTouchedPartitions partitions " +
-        "— that is a full-mirror rewrite, not incremental compaction; " +
-        "rewrite the mirror with a plain partitioned write instead")
-    val dropped = droppedPartitions(spark, mirrorDir)
-    // small lists inline as partition-prunable IN literals; past the
-    // threshold (a plan with 10^5 literals is its own scale bug — r8
-    // verdict) the filter becomes a broadcast semi/anti join against a
-    // values frame, trading pruning for a sane plan
-    val touchedCur = keepIn(spark, spark.read.parquet(mirrorDir),
-      partStr(col(partCol)), touched, semi = true)
-    // a previously-dropped partition folds from EMPTY: its stale
-    // files are invisible through the manifest, so a re-insert batch
-    // cannot resurrect pre-drop rows
-    val current =
-      if (dropped.isEmpty) touchedCur
-      else keepIn(spark, touchedCur, partStr(col(partCol)),
-        dropped.toSeq, semi = false)
-    // localCheckpoint: materializes the fold (touched-partitions-sized,
-    // small vs the mirror) and truncates lineage, so the write-back to
-    // the path being read is legal and the survivor scan shares the
-    // one fold
-    val updated = CdcOps.applyChangesWithActions(current, changes,
-      keyCol, tsCol, offsetCol, actionCol).localCheckpoint()
-    val survivors = updated.select(partStr(col(partCol))).distinct()
-      .collect().map(_.getString(0)).toSet
-    val emptied = touched.filterNot(survivors.contains).toSet
-    val revived = dropped.intersect(survivors)
-    updated.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(mirrorDir)
-    // the documented crash window sits HERE: data landed, manifest not
-    // yet updated. The soak's kill points inject a crash through this
-    // seam in both directions (drain: emptied partition's stale files
-    // visible until retry; revive: re-inserted partition still hidden
-    // until retry) and prove batch retry converges.
-    faultPoint("post-data-write")
-    val newDropped = (dropped -- revived) ++ emptied
-    if (newDropped != dropped)
-      writeDeletionManifest(spark, mirrorDir, newDropped)
-  }
-
-  /** Inline `isin` under [[InlineLiteralThreshold]] values; a broadcast
-    * left-semi (`semi = true`) / left-anti join against a values frame
-    * past it. The inline path keeps partition PRUNING; the join path
-    * keeps the PLAN bounded when the value list has grown to manifest
-    * scale — correctness is identical (values are null-safe rendered
-    * strings, so three-valued NULL logic never applies). */
-  private[sinks] val InlineLiteralThreshold = 1000
-
-  private def keepIn(spark: SparkSession, df: DataFrame, rendered: Column,
-                     values: Seq[String], semi: Boolean): DataFrame =
-    if (values.size <= InlineLiteralThreshold) {
-      if (semi) df.filter(rendered.isin(values: _*))
-      else df.filter(!rendered.isin(values: _*))
-    } else {
-      import spark.implicits._
-      // alias + qualify: a mirror table that happens to carry a column
-      // with the values-frame's name must not make the join condition
-      // ambiguous (advisory r9)
-      val vals = broadcast(spark.createDataset(values)
-        .toDF("__graft_part_value").as("__graft_vals"))
-      df.join(vals, rendered === col("__graft_vals.__graft_part_value"),
-        if (semi) "left_semi" else "left_anti")
-    }
-
-  /** Manifest subdirectory under the mirror root — underscore-prefixed
-    * so Spark/parquet file listing treats it as hidden. */
-  private[sinks] val DeletionManifestDir = "_graft_deleted_partitions"
-
-  /** String rendering of a NULL partition value — the same name the
-    * partitioned writer uses for its directory, so the manifest and
-    * the on-disk layout agree. (A real string partition VALUED
-    * exactly this collides, the same ambiguity Hive/Spark partition
-    * layouts themselves have.) */
-  private[sinks] val NullPartValue = "__HIVE_DEFAULT_PARTITION__"
-
-  /** Null-safe string rendering of the partition column: NOT-IN over
-    * a rendered value is never three-valued-NULL, so rows in a NULL
-    * partition cannot be silently dropped (or silently missed by the
-    * touched-partition pruning) once any manifest entry exists. */
-  private def partStr(c: Column): Column =
-    coalesce(c.cast("string"), lit(NullPartValue))
-
-  private def manifestFsPath(spark: SparkSession, mirrorDir: String) = {
-    val p = new org.apache.hadoop.fs.Path(mirrorDir, DeletionManifestDir)
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  /** Version-directory name: `v` + zero-padded sequence number. */
-  private def versionName(v: Long): String = f"v$v%09d"
-  private val VersionRe = "^v(\\d{9})$".r
-
-  /** The complete (committer-marked) manifest versions under a
-    * mirror's manifest dir, ascending — plus the highest sequence
-    * number present INCLUDING incomplete (crashed) writes, so the next
-    * write never reuses a partially-written directory. */
-  private def manifestVersions(spark: SparkSession, mirrorDir: String)
-      : (Seq[Long], Long) = {
-    val (p, fs) = manifestFsPath(spark, mirrorDir)
-    if (!fs.exists(p)) (Nil, 0L)
-    else {
-      val dirs = fs.listStatus(p).filter(_.isDirectory)
-        .flatMap(st => st.getPath.getName match {
-          case VersionRe(n) => Some((n.toLong, st.getPath))
-          case _ => None
-        })
-      val complete = dirs.filter { case (_, vp) =>
-        fs.exists(new org.apache.hadoop.fs.Path(vp, "_SUCCESS"))
-      }.map(_._1).sorted.toSeq
-      (complete, if (dirs.isEmpty) 0L else dirs.map(_._1).max)
-    }
-  }
-
-  /** The logically-dropped partition values (string-rendered) of a
-    * mirror — empty when no manifest exists. Manifest reads are
-    * partition METADATA (bounded by the partition count), the same
-    * driver-side shape as the touched-partition list. Reads the
-    * NEWEST COMPLETE manifest version (see [[writeDeletionManifest]]'s
-    * last-wins versioning), so a crash mid-manifest-write can never
-    * surface a partial manifest. */
-  def droppedPartitions(spark: SparkSession, mirrorDir: String): Set[String] = {
-    val (complete, _) = manifestVersions(spark, mirrorDir)
-    complete.lastOption match {
-      case None => Set.empty
-      case Some(v) =>
-        val (p, _) = manifestFsPath(spark, mirrorDir)
-        spark.read
-          .parquet(new org.apache.hadoop.fs.Path(p, versionName(v)).toString)
-          .select(col("part_value").cast("string"))
-          .collect().map(_.getString(0)).toSet
-    }
-  }
-
-  /** Each write is a FULL snapshot into a fresh `v<seq>` directory;
-    * readers take the newest directory carrying the committer's
-    * `_SUCCESS` marker. A crash mid-write leaves an incomplete (never
-    * read) version and the previous complete one intact — the r8
-    * advisory's resurrection mode (delete-then-write losing the WHOLE
-    * manifest, silently reviving every previously dropped partition)
-    * cannot happen. Older complete versions are pruned best-effort
-    * after the new one commits; a crash before pruning just leaves an
-    * extra version for the next write to prune. Snapshots ARE the
-    * compaction: the manifest never accumulates a log to replay. */
-  private def writeDeletionManifest(spark: SparkSession, mirrorDir: String,
-                                    dropped: Set[String]): Unit = {
-    import spark.implicits._
-    val (p, fs) = manifestFsPath(spark, mirrorDir)
-    val (complete, maxSeen) = manifestVersions(spark, mirrorDir)
-    val next = maxSeen + 1L
-    val nextPath = new org.apache.hadoop.fs.Path(p, versionName(next))
-    // coalesce(1): the manifest is tiny and one file keeps the read cheap
-    spark.createDataset(dropped.toSeq.sorted).toDF("part_value")
-      .coalesce(1)
-      .write.mode(SaveMode.ErrorIfExists)
-      .parquet(nextPath.toString)
-    // The commit marker is OUR contract, not the committer's: with
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs=false (a common
-    // production setting) Spark writes no _SUCCESS, and every version
-    // would be invisible to manifestVersions — silently resurrecting
-    // all dropped partitions (advisory r9). Create it explicitly when
-    // the committer didn't; ordering is still crash-safe (marker
-    // appears only after the data write returned), and only THEN are
-    // older complete versions pruned.
-    val marker = new org.apache.hadoop.fs.Path(nextPath, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, false).close()
-    require(manifestVersions(spark, mirrorDir)._1.lastOption.contains(next),
-      s"deletion manifest ${versionName(next)} not readable as complete " +
-        "after commit — refusing to prune prior versions")
-    complete.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, versionName(v)), true)
-    }
-  }
-
-  /**
-   * Manifest-honoring mirror reader — the read half of
-   * [[compactMirror]]'s deletion-log contract: partitions listed in
-   * the deletion manifest are filtered out (their stale files may
-   * still exist on disk; dynamic overwrite cannot remove a directory).
-   * Up to [[InlineLiteralThreshold]] dropped partitions, the filter is
-   * a partition-prunable NOT-IN over the partition column, so dropped
-   * partitions' files are never read, not merely dropped post-scan; a
-   * manifest grown past that (a mirror's LIFETIME accumulates drops —
-   * r8 verdict) switches to a broadcast anti join against the manifest
-   * values, keeping the read plan bounded at any manifest size.
-   */
-  def readMirror(spark: SparkSession, mirrorDir: String,
-                 partCol: String): DataFrame = {
-    val dropped = droppedPartitions(spark, mirrorDir)
-    val df = spark.read.parquet(mirrorDir)
-    if (dropped.isEmpty) df
-    else keepIn(spark, df, partStr(col(partCol)), dropped.toSeq,
-      semi = false)
-  }
 }

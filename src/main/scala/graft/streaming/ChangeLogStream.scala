@@ -194,6 +194,10 @@ class ChangeLogScanBuilder(options: CaseInsensitiveStringMap)
   private val numPartitions = options.getInt("numPartitions", 4)
   private val maxEventsPerTrigger: Long =
     options.getLong("maxEventsPerTrigger", Long.MaxValue)
+  // a cap below 1 would stall the stream or move its offset backwards
+  require(numPartitions >= 1, s"option numPartitions must be >= 1, not $numPartitions")
+  require(maxEventsPerTrigger >= 1,
+    s"option maxEventsPerTrigger must be >= 1, not $maxEventsPerTrigger")
   private val tables: Option[Set[String]] =
     Option(options.get("tables")).map(_.split(",").map(_.trim).toSet)
   private val startAt = options.getOrDefault("startAt", "earliest")

@@ -27,6 +27,10 @@ import graft.util.Cols
  */
 object ExtractionPipeline {
 
+  /** The `withWatermark` delay: nothing aggregates on it, but the node
+    * reports `eventTime.max`, which [[StalenessListener]] reads. */
+  private val WatermarkDelay = "10 seconds"
+
   /** Open the streaming change log (see [[ChangeLogStream]] options). */
   def readChangeLog(spark: SparkSession, buffer: String,
                     tables: Option[Seq[String]] = None,
@@ -59,10 +63,9 @@ object ExtractionPipeline {
    * checkpointed offsets + the batchId-keyed overwrite.
    */
   def start(stream: DataFrame, outDir: String, checkpointDir: String,
-            triggerMs: Long = 1000L,
-            watermarkDelay: String = "10 seconds"): StreamingQuery =
+            triggerMs: Long = 1000L): StreamingQuery =
     stream
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointDir)

@@ -60,8 +60,10 @@ object FileChangeLogStream {
   private[streaming] final case class Segment(file: String, minId: Long,
                                               maxId: Long, tsFactor: Long)
 
-  /** Everything the source needs from one segment, from one footer read. */
-  private[streaming] def readFooter(conf: Configuration, f: Path): Segment = {
+  /** Everything the source needs from one segment, from one footer read;
+    * `None` for a segment with no `event_id` statistics (a zero-row
+    * file, as [[writeSegment]] lands for an empty batch). */
+  private[streaming] def readFooter(conf: Configuration, f: Path): Option[Segment] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
     try {
       val footer = reader.getFooter
@@ -83,7 +85,8 @@ object FileChangeLogStream {
           }
         case _ => 1L
       }
-      Segment(f.toString, mins.min, maxs.max, tsFactor)
+      if (stats.isEmpty) None
+      else Some(Segment(f.toString, mins.min, maxs.max, tsFactor))
     } finally reader.close()
   }
 }
@@ -94,8 +97,8 @@ final class SegmentLog(dir: String) extends ChangeLog {
   import FileChangeLogStream.{readFooter, Segment}
 
   private val conf = new Configuration()
-  // immutable segments: each file's footer is read once
-  private val footers = mutable.HashMap[String, Segment]()
+  // immutable segments: each file's footer is read once, an empty one too
+  private val footers = mutable.HashMap[String, Option[Segment]]()
 
   private def segments(): Seq[Segment] = synchronized {
     val p = new Path(dir)
@@ -103,7 +106,7 @@ final class SegmentLog(dir: String) extends ChangeLog {
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => footers.getOrElseUpdate(s.getPath.toString,
+      .flatMap(s => footers.getOrElseUpdate(s.getPath.toString,
         readFooter(conf, s.getPath)))
   }
 

@@ -21,6 +21,12 @@ class ContractSpec extends AnyFunSuite {
     try src.mkString finally src.close()
   }
 
+  /** Every `.scala` file under `src/main/scala`, with its text. */
+  private lazy val mainSources: Seq[(java.nio.file.Path, String)] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readString(p)).toSeq
+
   private lazy val registered: Seq[String] =
     """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
       .findAllMatchIn(source).map(_.group(1)).toSeq
@@ -45,12 +51,9 @@ class ContractSpec extends AnyFunSuite {
   test("GraftSession is the only SparkSession factory in the main sources") {
     // one factory keeps every main's settings identical; a main that
     // builds its own session drifts (cores, time zone, session floors)
-    val builders = java.nio.file.Files.walk(
-        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p)
-        .contains("SparkSession.builder("))
-      .map(_.getFileName.toString).toSet
+    val builders = mainSources
+      .collect { case (p, src) if src.contains("SparkSession.builder(") =>
+        p.getFileName.toString }.toSet
     assert(builders == Set("GraftSession.scala"),
       s"files building their own SparkSession: ${builders - "GraftSession.scala"}")
   }
@@ -58,14 +61,24 @@ class ContractSpec extends AnyFunSuite {
   test("the main sources hold one change-log source: one TableProvider, one MicroBatchStream") {
     // one offset contract over every log; a second stream copy drifts
     // (an empty-log start and numPartitions once differed between two)
-    val src = java.nio.file.Files.walk(
-        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => java.nio.file.Files.readString(p)).mkString("\n")
+    val src = mainSources.map(_._2).mkString("\n")
     for (iface <- Seq("MicroBatchStream", "TableProvider")) {
       val n = s"extends $iface\\b".r.findAllMatchIn(src).size
       assert(n == 1, s"$n classes extend $iface")
     }
+  }
+
+  test("every public def of Sinks has a caller in the main sources outside sinks/") {
+    // Sinks is the extractor's sink: a writer that only its own spec
+    // reaches is surface that no extraction, query or main runs
+    val (sinks, callers) = mainSources.partition(_._1.startsWith(
+      java.nio.file.Paths.get("src/main/scala/graft/sinks")))
+    val defs = sinks.flatMap { case (_, src) =>
+      """(?m)^  def (\w+)""".r.findAllMatchIn(src).map(_.group(1)) }
+    val text = callers.map(_._2).mkString("\n")
+    val orphans = defs.filterNot(d => s"\\bSinks\\.$d\\b".r.findFirstIn(text).isDefined)
+    assert(defs.nonEmpty && orphans.isEmpty,
+      s"Sinks defs no main source outside sinks/ calls: $orphans")
   }
 
   test("queries without an oracle are the known rows-only set") {

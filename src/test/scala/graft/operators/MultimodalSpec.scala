@@ -322,14 +322,6 @@ class MultimodalSpec extends SparkSpec {
       w >= 32 && w < 1952 && h >= 32 && h < 1112 && c == 3 })
   }
 
-  test("feature stub yields dims floats in [-1, 1]") {
-    val m = Multimodal.asMedia(docs, "doc_id", $"text".cast("binary"), "image")
-    val f = m.select(Multimodal.extractFeaturesStub($"payload", 8))
-      .as[Seq[Float]].collect()
-    assert(f.forall(_.size == 8))
-    assert(f.flatten.forall(v => v >= -1.0f && v <= 1.0f))
-  }
-
   test("batched decode processes partitions in fixed-size batches") {
     val media = (1L to 150L)
       .map(i => MediaRow(i, s"payload-$i".getBytes("UTF-8")))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.operators.CdcOps
 
 class ProfilerSpec extends SparkSpec {
   import spark.implicits._
@@ -15,15 +14,6 @@ class ProfilerSpec extends SparkSpec {
     assert(got("id") == (("id", 0L, 3L, "1", "3", 3L)))
     assert(got("s") == (("s", 1L, 1L, "a", "a", 2L)))
     assert(got("v") == (("v", 0L, 2L, "1.5", "2.5", 3L)))
-  }
-
-  test("txidsByCommitTs groups txid sets per commit timestamp") {
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val log = Seq((ts, 1L), (ts, 2L), (ts, 1L)).toDF("ts", "user_id")
-    val got = CdcOps.txidsByCommitTs(log)
-      .as[(java.sql.Timestamp, Seq[Long])].collect()
-    assert(got.length == 1)
-    assert(got.head._2 == Seq(1L, 2L)) // sorted distinct set
   }
 
   test("GraftSession builder carries the recommended configs") {

@@ -782,25 +782,6 @@ class TextAndSimilaritySpec extends SparkSpec {
       TextOps.bpeMergesInMemory(tiny, 10))
   }
 
-  test("bpeSave/bpeLoad round-trips a trained model in application order") {
-    val corpus = ((1 to 6).map(i => (i.toLong, "era")) ++
-      (7 to 11).map(i => (i.toLong, "ve")) ++ Seq((12L, "ver")))
-      .toDF("doc_id", "text")
-    val model = TextOps.bpeTrain(corpus, rounds = 4)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe-model").toString + "/m"
-    TextOps.bpeSave(spark, model, dir)
-    val loaded = TextOps.bpeLoad(spark, dir)
-    assert(loaded.merges == model.merges,
-      "merge ORDER is the model — it must survive the round-trip")
-    // and the loaded model serves identically
-    val a = TextOps.bpeEncodeWith(corpus, model)
-      .as[(Long, Long, Long)].collect().toSet
-    val b = TextOps.bpeEncodeWith(corpus, loaded)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(a == b)
-  }
-
   test("a >=1k-merge model trains and serves through the partition-local path") {
     // r9 verdict item 2: the 64-merge codegen ceiling must not be the
     // tokenizer's ceiling. 2000 distinct 8-char words: exhaustion

@@ -95,40 +95,6 @@ class SinksSpec extends SparkSpec {
     assert(e.getMessage.contains("hdfs"), e.getMessage)
   }
 
-  test("writePipeCsv renders null as literal null") {
-    val dir = Files.createTempDirectory("sink").toString + "/csv"
-    Sinks.writePipeCsv(
-      Seq((1L, Option.empty[String])).toDF("id", "s"), dir)
-    val lines = spark.read.text(dir).as[String].collect()
-    assert(lines.toSeq == Seq("1|null"))
-  }
-
-  test("writeParquet partitions by column") {
-    val dir = Files.createTempDirectory("sink").toString + "/pq"
-    Sinks.writeParquet(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "k"), dir, Seq("k"))
-    assert(new java.io.File(dir, "k=a").exists())
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 2)
-  }
-
-  test("partitioned writes prune: a key filter reads only its directory") {
-    // the 100 TB layout claim behind partitionBy(source): a filtered
-    // read must show the partition filter on the scan and touch one
-    // directory, not list-and-discard the rest
-    val dir = Files.createTempDirectory("sink").toString + "/pp"
-    Sinks.writeParquet(
-      (1 to 100).map(i => (i.toLong, s"src${i % 4}")).toDF("id", "k"),
-      dir, Seq("k"))
-    val q = spark.read.parquet(dir).filter($"k" === "src1")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    assert(plan.linesIterator.exists(l =>
-      l.contains("PartitionFilters") && l.contains("k")), plan)
-    assert(q.count() == 25)
-    assert(q.select("id").as[Long].collect().forall(_ % 4 == 1))
-  }
-
   test("orc round-trip preserves schema and values") {
     // second columnar format besides parquet — same writer contract
     val dir = Files.createTempDirectory("sink").toString + "/orc"
@@ -141,37 +107,5 @@ class SinksSpec extends SparkSpec {
       df.schema.map(f => (f.name, f.dataType)))
     assert(back.orderBy($"id").as[(Long, String, Double)].collect().toSeq ==
       Seq((1L, "a", 1.5), (2L, null, 2.5)))
-  }
-
-  test("writeZOrdered: per-file stats form bounded rectangles that prune") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    // full 64x64 grid -> 16 z-ordered files; each physical file's
-    // min/max stats must expose a 16x16 square (the zorderLayout
-    // report made REAL on disk)
-    val grid = (0 until 64).flatMap(x => (0 until 64).map(y =>
-      (x.toLong, y.toLong))).toDF("x", "y")
-    val dir = Files.createTempDirectory("zord").toString + "/z"
-    Sinks.writeZOrdered(grid, col("x"), col("y"), dir, fileBits = 4)
-    val files = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
-    assert(files.size == 16, s"expected 16 files, got ${files.size}")
-    val rects = files.map { f =>
-      val s = spark.read.parquet(f)
-        .agg(min($"x"), max($"x"), min($"y"), max($"y"), count(lit(1)))
-        .as[(Long, Long, Long, Long, Long)].head()
-      s
-    }
-    rects.foreach { case (minX, maxX, minY, maxY, n) =>
-      assert(n == 256L)
-      assert(maxX - minX + 1 == 16L && maxY - minY + 1 == 16L,
-        s"file rect not a 16x16 square: [$minX,$maxX]x[$minY,$maxY]")
-    }
-    // the pruning claim: a 16-wide x range touches 4 of 16 files,
-    // where a y-major 1-D sort would touch ALL of them on x
-    val touched = rects.count { case (minX, maxX, _, _, _) =>
-      maxX >= 0L && minX <= 15L
-    }
-    assert(touched == 4, s"x-range touched $touched files")
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 
@@ -38,7 +39,7 @@ abstract class ChangeLogContract extends SparkSpec {
     }.load()
 
   /** Run `body` over a memory-sink query of `df`, then stop it. */
-  private def inMemory[A](df: DataFrame)(body: (() => Seq[Long],
+  protected def inMemory[A](df: DataFrame)(body: (() => Seq[Long],
       org.apache.spark.sql.streaming.StreamingQuery) => A): A = {
     val name = s"m${System.nanoTime()}"
     val q = df.writeStream.format("memory").queryName(name)
@@ -86,6 +87,19 @@ abstract class ChangeLogContract extends SparkSpec {
       assert(q.recentProgress.count(_.numInputRows > 0) >= 4)
       assert(q.recentProgress.forall(_.numInputRows <= 25))
     }
+  }
+
+  test("a cap or partition count below 1 fails the query, naming the option") {
+    // a cap of 0 would stall the stream silently; 0 partitions would
+    // fail with a bare "requirement failed" at the first batch
+    val log = newLog()
+    log.append((1L to 10L).map(ev(_)))
+    for (opt <- Seq("maxEventsPerTrigger", "numPartitions"))
+      inMemory(read(log, opt -> 0)) { (_, q) =>
+        val e = intercept[StreamingQueryException](q.awaitTermination(60000L))
+        assert(e.getCause.isInstanceOf[IllegalArgumentException], e)
+        assert(e.getCause.getMessage.contains(opt), e.getCause.getMessage)
+      }
   }
 
   test("tables option pushes the IN-list into the source") {

@@ -70,6 +70,23 @@ class FileChangeLogStreamSpec extends ChangeLogContract {
     assert(got == ((500L, 500L, 499L)))
   }
 
+  test("a zero-row segment between two batches adds no span and is not fatal") {
+    // an empty batch lands as a footer-only file: no row group, so no
+    // event_id statistics to take a span from
+    val log = newLog()
+    log.append((0L until 10L).map(ev(_)))
+    inMemory(read(log)) { (got, q) =>
+      q.processAllAvailable()
+      log.append(Nil)
+      q.processAllAvailable()
+      log.append((10L until 20L).map(ev(_)))
+      q.processAllAvailable()
+      assert(new java.io.File(log.option._2).listFiles()
+        .count(_.getName.endsWith(".parquet")) == 3)
+      assert(got() == (0L until 20L))
+    }
+  }
+
   test("null props stream through the extraction pipeline as `null`") {
     // Schema declares props nullable and the in-memory source passes
     // null through; a segment holding null props must do the same
