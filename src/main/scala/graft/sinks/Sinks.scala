@@ -6,41 +6,57 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CdcOps
-import graft.streaming.StalenessListener
+import graft.streaming.{Freshness, Landed}
 
 /**
  * The extractor's two outputs, mirroring the reference's (SURVEY.md
  * §2.1 S5/S6): the pipe-delimited chunk files every micro-batch lands
  * through, committed by atomic rename instead of per-row `flush()`
- * (`WorkerRunnable.java:211`), and the staleness/throughput CSV.
+ * (`WorkerRunnable.java:211`), and the staleness/throughput CSV, one
+ * row per batch of the extraction query's own freshness log, which the
+ * chunk-write job fills with what it landed.
  */
 object Sinks {
+
+  /** What one partition of [[writePipeChunks]] landed: its line count
+    * and the largest non-null `key` among those lines. */
+  final case class Chunk(lines: Long, maxKey: Option[Long])
 
   /**
    * S5: pipe-delimited chunk files, one `part-<pid>.txt` per non-empty
    * partition ≙ one `chunk<i>` per worker (`WorkerRunnable.java:75-80,
    * 202-216`), null as `"null"`. The directory is recreated first, so a
    * replayed call replaces what an earlier attempt left. One job, no
-   * `_temporary/`, `_SUCCESS` or `.crc`. Tasks write with java.nio, so
-   * `path` is local (plain or `file:`): `local[n]` runs them in the driver.
+   * `_temporary/`, `_SUCCESS` or `.crc`; the same job reports each
+   * partition's [[Chunk]], with `key` read as a long. Tasks write with
+   * java.nio, so `path` is local (plain or `file:`): `local[n]` runs them
+   * in the driver.
    */
-  def writePipeChunks(df: DataFrame, cols: Seq[Column], path: String): Unit = {
+  def writePipeChunks(df: DataFrame, cols: Seq[Column], key: Column,
+                      path: String): Seq[Chunk] = {
     val uri = new org.apache.hadoop.fs.Path(path).toUri
     require(uri.getScheme == null || uri.getScheme == "file",
       s"writePipeChunks writes local files only, not $path")
     val dir = uri.getPath
     FileUtils.deleteDirectory(new java.io.File(dir))
     Files.createDirectories(Paths.get(dir))
-    df.select(CdcOps.pipeLine(cols)).queryExecution.toRdd.foreachPartition {
-      rows =>
-        val task = TaskContext.get()
+    val rdd = df.select(CdcOps.pipeLine(cols), key.cast("long"))
+      .queryExecution.toRdd
+    df.sparkSession.sparkContext.runJob(rdd,
+      (task: TaskContext, rows: Iterator[InternalRow]) => {
+        var (lines, keys, max) = (0L, 0L, Long.MinValue)
         writeChunk(Paths.get(dir), task.partitionId(), task.taskAttemptId(),
-          rows.map(_.getUTF8String(0)))
-    }
+          rows.map { r =>
+            lines += 1
+            if (!r.isNullAt(1)) { keys += 1; max = math.max(max, r.getLong(1)) }
+            r.getUTF8String(0)
+          })
+        Chunk(lines, Option.when(keys > 0)(max))
+      }).toSeq
   }
 
   /** One partition's lines into a hidden temp file, renamed over
@@ -62,14 +78,19 @@ object Sinks {
   /**
    * S6: the metric CSVs (`staleness_*`, `task_processing_time_*`,
    * `CoordinatorRunnable.java:53-64`; `QueryRequestRunnable.java:19-27`)
-   * collapse to one queryable frame from the listener.
+   * collapse to one row per extraction batch of one query's freshness
+   * log: what it landed, when, the staleness trough at that moment and
+   * the time-weighted staleness mean so far ([[Freshness]]).
    */
-  def writeMetricsCsv(listener: StalenessListener, spark: SparkSession,
-                      path: String): Unit =
-    listener.toDF(spark)
-      .select(col("batchId"), col("wallClockMs"), col("eventTimeMaxMs"),
-        col("stalenessMs"), col("avgStalenessMs"), col("numInputRows"),
-        col("batchDurationMs"))
+  def writeMetricsCsv(log: Seq[Landed], spark: SparkSession,
+                      path: String): Unit = {
+    import spark.implicits._
+    log.lazyZip(Freshness.troughsMs(log)).lazyZip(Freshness.timeWeightedMs(log))
+      .map { (l, trough, avg) =>
+        (l.batchId, l.rows, l.maxCommitUs, l.visibleMs, trough, avg) }
+      .toSeq.toDF("batchId", "rows", "maxCommitUs", "visibleMs",
+        "stalenessMs", "avgStalenessMs")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
+  }
 }

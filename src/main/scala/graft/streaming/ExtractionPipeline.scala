@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +18,9 @@ import graft.util.Cols
  * The end-to-end extraction pipeline — the reference's `Client.main`
  * dataflow (SURVEY.md §3.1) as one Structured Streaming job:
  *
- *   changelog source → (watermark) → per-batch commit-ts enrichment
- *   (`max(ts)` over a `user_id` window, replacing the N+1 lookups in
- *   one scan of the batch) → pipe-delimited files.
+ *   changelog source → per-batch commit-ts enrichment (`max(ts)` over
+ *   a `user_id` window, replacing the N+1 lookups in one scan of the
+ *   batch) → pipe-delimited files → a [[Landed]] record per batch.
  *
  * The coordinator thread, the bounded queue, N worker threads, and the
  * per-worker chunk files all disappear into the engine: trigger
@@ -24,12 +29,18 @@ import graft.util.Cols
  * ledger. Each micro-batch lands under `batch=<id>` as one chunk file
  * per non-empty partition of the window's `user_id` shuffle after
  * adaptive coalescing (a small batch writes one file), not per worker.
+ * The job that writes the chunks also reports what they hold, so each
+ * query keeps its own freshness log ([[freshness]], [[Freshness]]).
  */
 object ExtractionPipeline {
 
-  /** The `withWatermark` delay: nothing aggregates on it, but the node
-    * reports `eventTime.max`, which [[StalenessListener]] reads. */
-  private val WatermarkDelay = "10 seconds"
+  private val logs = new ConcurrentHashMap[UUID, ConcurrentLinkedQueue[Landed]]()
+
+  /** The [[Landed]] record of every batch that query `id`, started by
+    * [[start]], has written in this process, in batch order (the latest
+    * start under that id; empty for any other query). */
+  def freshness(id: UUID): Seq[Landed] =
+    Option(logs.get(id)).fold(Seq.empty[Landed])(_.asScala.toVector)
 
   /** Open the streaming change log (see [[ChangeLogStream]] options). */
   def readChangeLog(spark: SparkSession, buffer: String,
@@ -59,20 +70,24 @@ object ExtractionPipeline {
    * Start the extraction: every micro-batch is enriched with the
    * transaction commit timestamp ([[withCommitTs]] — the set-oriented
    * replacement for `WorkerRunnable.java:130-144`) and written as
-   * pipe-delimited text by [[writeBatch]]. Exactly-once comes from the
+   * pipe-delimited text by [[writeBatch]], whose [[Landed]] record goes
+   * to the query's [[freshness]] log. Exactly-once comes from the
    * checkpointed offsets + the batchId-keyed overwrite.
    */
   def start(stream: DataFrame, outDir: String, checkpointDir: String,
-            triggerMs: Long = 1000L): StreamingQuery =
-    stream
-      .withWatermark("ts", WatermarkDelay)
-      .writeStream
+            triggerMs: Long = 1000L): StreamingQuery = {
+    val log = new ConcurrentLinkedQueue[Landed]()
+    val query = stream.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, outDir)
+        log.add(writeBatch(batch, batchId, outDir))
+        ()
       }
       .start()
+    logs.put(query.id, log)
+    query
+  }
 
   /**
    * One micro-batch of the extraction sink: enrich with the
@@ -85,11 +100,16 @@ object ExtractionPipeline {
    * missing line (the reference had no such story: a worker crash
    * mid-chunk lost or duplicated rows, SURVEY §3.4,
    * `CoordinatorRunnable.java:35-42`). [[ExactlyOnceSinkSpec]] kills a
-   * batch after a partial write and proves the law.
+   * batch after a partial write and proves the law. The same job
+   * reports each chunk's lines and largest commit ts; the batch is
+   * visible once the last chunk is renamed in, when the job returns.
    */
-  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
-    Sinks.writePipeChunks(withCommitTs(batch), lineFields,
-      s"$outDir/batch=$batchId")
+  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Landed = {
+    val chunks = Sinks.writePipeChunks(withCommitTs(batch), lineFields,
+      commitUs, s"$outDir/batch=$batchId")
+    Landed(batchId, chunks.map(_.lines).sum, chunks.flatMap(_.maxKey).maxOption,
+      System.currentTimeMillis())
+  }
 
   /**
    * Add `commit_ts` = the transaction's max `ts` within `batch`, as a
@@ -107,5 +127,7 @@ object ExtractionPipeline {
   def pipeLines(enriched: DataFrame): DataFrame =
     enriched.select(CdcOps.pipeLine(lineFields).as("line"))
 
-  private def lineFields = changeFields :+ Cols.epochUs(col("commit_ts"))
+  private def commitUs = Cols.epochUs(col("commit_ts"))
+
+  private def lineFields = changeFields :+ commitUs
 }

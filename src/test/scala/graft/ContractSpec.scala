@@ -68,6 +68,14 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("no main source extends StreamingQueryListener: freshness stays scoped to one query") {
+    // a session-wide listener sees every query's progress; the
+    // extraction's staleness comes from its own sink's freshness log
+    val src = mainSources.map(_._2).mkString("\n")
+    val n = "extends StreamingQueryListener\\b".r.findAllMatchIn(src).size
+    assert(n == 0, s"$n classes extend StreamingQueryListener")
+  }
+
   test("every public def of Sinks has a caller in the main sources outside sinks/") {
     // Sinks is the extractor's sink: a writer that only its own spec
     // reaches is surface that no extraction, query or main runs

@@ -17,7 +17,7 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("sink").toString + "/chunks"
     val df = Seq((1L, Some("a"), 1.5), (2L, None, 2.5), (3L, Some("c"), 3.5))
       .toDF("id", "s", "v").repartition(2)
-    Sinks.writePipeChunks(df, Seq($"id", $"s", $"v"), dir)
+    Sinks.writePipeChunks(df, Seq($"id", $"s", $"v"), $"id", dir)
     val lines = spark.read.text(dir).as[String].collect().sorted
     assert(lines.toSeq == Seq("1|a|1.5", "2|null|2.5", "3|c|3.5"))
     val parts = new java.io.File(dir).listFiles()
@@ -45,7 +45,7 @@ class SinksSpec extends SparkSpec {
     assert(tree(dir).exists(_.endsWith(".crc")), tree(dir))
 
     Sinks.writePipeChunks(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
-      Seq($"id", $"s"), dir)
+      Seq($"id", $"s"), $"id", dir)
     assert(tree(dir).nonEmpty && tree(dir).forall(_.startsWith("part-")),
       tree(dir))
     assert(spark.read.text(dir).as[String].collect().sorted.toSeq ==
@@ -77,7 +77,7 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("sink").toString + "/sparse"
     val df = spark.range(0, 3, 1, 8).toDF("id") // 8 slices, 5 of them empty
     assert(df.rdd.getNumPartitions == 8)
-    Sinks.writePipeChunks(df, Seq($"id", lit(null)), dir)
+    Sinks.writePipeChunks(df, Seq($"id", lit(null)), $"id", dir)
     assert(tree(dir).length == 3, tree(dir))
     assert(spark.read.text(dir).as[String].collect().sorted.toSeq ==
       Seq("0|null", "1|null", "2|null"))
@@ -86,12 +86,24 @@ class SinksSpec extends SparkSpec {
     assert(tree(none.toString).isEmpty)
   }
 
+  test("writePipeChunks reports each partition's line count and largest key") {
+    val dir = Files.createTempDirectory("sink").toString + "/keys"
+    val df = spark.range(0, 6, 1, 3).toDF("id") // slices {0,1} {2,3} {4,5}
+    val chunks = Sinks.writePipeChunks(df, Seq($"id"),
+      when($"id" >= 2, $"id" * 10), dir)
+    assert(chunks == Seq(Sinks.Chunk(2, None), Sinks.Chunk(2, Some(30L)),
+      Sinks.Chunk(2, Some(50L))))
+    assert(tree(dir).length == 3, tree(dir))
+    val none = Sinks.writePipeChunks(df.filter($"id" < 0), Seq($"id"), $"id", dir)
+    assert(none.forall(_ == Sinks.Chunk(0, None)) && tree(dir).isEmpty, none)
+  }
+
   test("writePipeChunks takes a file: URI and rejects other schemes") {
     val dir = Files.createTempDirectory("sink").resolve("uri")
-    Sinks.writePipeChunks(Seq(1L).toDF("id"), Seq($"id"), dir.toUri.toString)
+    Sinks.writePipeChunks(Seq(1L).toDF("id"), Seq($"id"), $"id", dir.toUri.toString)
     assert(spark.read.text(dir.toString).as[String].collect().toSeq == Seq("1"))
     val e = intercept[IllegalArgumentException](Sinks.writePipeChunks(
-      Seq(1L).toDF("id"), Seq($"id"), "hdfs://localhost:1/graft/chunks"))
+      Seq(1L).toDF("id"), Seq($"id"), $"id", "hdfs://localhost:1/graft/chunks"))
     assert(e.getMessage.contains("hdfs"), e.getMessage)
   }
 

@@ -54,6 +54,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
             throw new RuntimeException("injected mid-batch crash")
           }
           ExtractionPipeline.writeBatch(batch, id, outDir)
+          ()
         }
         .start()
       try {
