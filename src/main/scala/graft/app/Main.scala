@@ -3,7 +3,6 @@ package graft.app
 import graft.model.EventGroups
 import graft.sources.ChangeLogSource
 import graft.streaming.{ChangeEvent, ChangeLogBuffers, ChangeLogStream, ExtractionPipeline}
-import graft.util.Cols
 
 /**
  * The reference `Client.main` (`Client.java:11-49`) re-expressed: same
@@ -17,7 +16,8 @@ import graft.util.Cols
  * | tables (group name) | graft.tables       | source IN-list pushdown    |
  *
  * A feeder thread replays the driver `events` table into the change
- * log at a steady rate (the TPC-C writer stand-in); the extraction
+ * log at a steady rate, stamped with the time it appends them (the
+ * TPC-C writer stand-in); the extraction
  * query tails it; its freshness log prints staleness/throughput at the
  * end (replacing the reference's three CSV writers).
  */
@@ -54,34 +54,38 @@ object Main {
     val events = ChangeLogSource.table(spark, sfDir, "events").count()
     val total = if (sourceDir.isDefined) events else math.min(events, feederMax)
     // The log: a segment directory as is, or a buffer the feeder fills.
-    val (logOption, logName) = sourceDir match {
-      case Some(d) => "path" -> d
+    val (logOption, logName, feeder) = sourceDir match {
+      case Some(d) => ("path", d, None)
       case None =>
         // Feeder: replay the events table into the buffer in batches,
-        // the first `feederMax` offsets only (dev harness).
-        // ts converts to epoch micros INSIDE the plan (Cols.epochUs is
-        // NTZ-safe); a Row.getTimestamp here would ClassCastException
-        // on TIMESTAMP_NTZ parquet, which surfaces as LocalDateTime
+        // the first `feederMax` offsets only (dev harness). Only ids and
+        // payloads are replayed: each event is stamped with its append
+        // time in µs plus its index, so `ts` order stays `event_id`
+        // order and staleness is measured against now, not the table's
+        // recorded times.
         import org.apache.spark.sql.functions.col
         val rows = ChangeLogSource.table(spark, sfDir, "events")
-          .select(col("event_id"), Cols.epochUs(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            col("value"), col("props"))
           .orderBy("event_id").limit(feederMax)
           .collect()
-          .map(r => ChangeEvent(r.getLong(0), r.getLong(1),
-            r.getLong(2), r.getString(3), r.getDouble(4), r.getString(5)))
+          .map(r => ChangeEvent(r.getLong(0), 0L, r.getLong(1),
+            r.getString(2), r.getDouble(3), r.getString(4)))
           .sortBy(_.eventId)
         val bufName = s"main-${System.nanoTime()}"
         val buffer = ChangeLogBuffers.get(bufName)
         val feeder = new Thread(() => {
+          var nextUs = 0L
           rows.grouped(math.max(1, rows.length / 20)).foreach { chunk =>
-            buffer.append(chunk.toSeq)
+            val t0 = math.max(System.currentTimeMillis() * 1000L, nextUs)
+            buffer.append(chunk.toSeq.zipWithIndex.map { case (e, i) =>
+              e.copy(tsMicros = t0 + i) })
+            nextUs = t0 + chunk.length
             Thread.sleep(triggerMs / 2)
           }
         }, "changelog-feeder")
         feeder.setDaemon(true)
-        feeder.start()
-        "buffer" -> bufName
+        ("buffer", bufName, Some(feeder))
     }
     def open(filter: Seq[String]): org.apache.spark.sql.DataFrame = {
       val r = spark.readStream.format(ChangeLogStream.FormatName)
@@ -131,6 +135,15 @@ object Main {
       .outputMode("append")
       .option("checkpointLocation", s"$outDir-trans-checkpoint-$runTag")
       .start()
+
+    // The buffer keeps only what its readers have not committed: feed it
+    // once every query has registered its reader (a first trigger over
+    // the empty log), or the extraction's first commit could drop ids
+    // a later reader never saw.
+    feeder.foreach { f =>
+      Seq(query, gapQuery, transQuery).foreach(_.processAllAvailable())
+      f.start()
+    }
 
     query.awaitTermination(runMs) // runDuration ≙ `Client.java:34-42`
     query.stop()

@@ -3,7 +3,7 @@ package graft.streaming
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -54,15 +54,22 @@ import graft.sources.ChangeLogSource.{splitRange, OffsetRange}
  * | `numPartitions`       | 4         | `(min, max]` sub-ranges per batch     |
  * | `maxEventsPerTrigger` | unbounded | admission cap on ids per batch        |
  * | `tables`              | all       | comma-separated `event_type` IN-list  |
- * | `startAt`             | earliest  | `earliest` or `latest` (see below)    |
+ * | `startAt`             | earliest  | exactly `earliest` or `latest`        |
  *
- * `buffer` defaults to the name `default`; naming both logs is an
- * error. `startAt` is consulted only when the checkpoint holds no
- * offset yet: `earliest` replays the log, `latest` skips its history
- * like the reference coordinator (`CoordinatorRunnable.java:35-42`).
- * A log that holds no event yet sits at [[ChangeLogStream.BeforeAnyId]],
- * so a stream started before the first append still reads that first
- * event.
+ * `buffer` defaults to the name `default`; naming both logs, or any
+ * other `startAt`, is an error. `startAt` is consulted only when the
+ * checkpoint holds no offset yet: `earliest` starts at the earliest id
+ * the log still holds, as in Kafka, and `latest` skips its history like
+ * the reference coordinator (`CoordinatorRunnable.java:35-42`). A log
+ * that holds no event yet sits at [[ChangeLogStream.BeforeAnyId]], so a
+ * stream started before the first append still reads that first event.
+ *
+ * A buffer keeps only the ids some registered stream has not committed
+ * (Structured Streaming requires a source to replay only back to its
+ * last commit): each stream registers when Spark creates it, `commit`
+ * raises its mark and `stop` releases it. A stream whose checkpoint
+ * offset lies below what the log has dropped fails, naming the lost
+ * range, rather than read a hole.
  */
 object ChangeLogStream {
   /** Change-log record schema (events stand-in, FIXTURES.md §B). */
@@ -91,40 +98,98 @@ final case class ChangeEvent(eventId: Long, tsMicros: Long, userId: Long,
  * the `audit.logged_actions` stand-in. Thread-safe: a producer thread
  * appends while the stream polls (the reference's coordinator reads
  * while TPC-C writes).
+ *
+ * Unlike the reference's audit table it is pruned: it holds only ids
+ * above the lowest committed mark of its registered readers
+ * ([[register]]). The last appended id and the floor (the highest id
+ * dropped) are kept apart from the held rows, so an emptied log still
+ * knows where it ends.
  */
 final class ChangeLogBuffer {
-  private val events = new ArrayBuffer[ChangeEvent]()
+  private val events = new mutable.ArrayDeque[ChangeEvent]()
+  private var last = ChangeLogStream.BeforeAnyId
+  private var dropped = ChangeLogStream.BeforeAnyId
+  private val marks = mutable.Set[Mark]()
 
-  def append(rows: Seq[ChangeEvent]): Unit = synchronized {
-    rows.foreach { e =>
-      require(events.isEmpty || e.eventId > events.last.eventId,
-        s"event ids must be monotone: ${e.eventId} after ${events.last.eventId}")
-      events += e
+  /** One registered reader's low-water mark: it no longer needs ids at
+    * or below `upTo`. */
+  private final class Mark(var upTo: Long) extends ChangeLog.Hold {
+    override def commit(end: Long): Unit = ChangeLogBuffer.this.synchronized {
+      if (end > upTo) { upTo = end; trim() }
+    }
+    override def close(): Unit = ChangeLogBuffer.this.synchronized {
+      marks -= this
+      trim()
     }
   }
 
-  /** (first, last) `event_id` in the log; `None` while it is empty. */
-  def span: Option[(Long, Long)] = synchronized {
-    if (events.isEmpty) None else Some((events.head.eventId, events.last.eventId))
+  /** Land one transaction, all or nothing: every id must exceed the one
+    * before it and the last id appended so far. */
+  def append(rows: Seq[ChangeEvent]): Unit = synchronized {
+    var prev = last
+    rows.foreach { e =>
+      require(e.eventId > prev, s"event ids must be monotone: ${e.eventId} after $prev")
+      prev = e.eventId
+    }
+    events ++= rows
+    last = prev
   }
 
-  /** Last `event_id`, or [[ChangeLogStream.BeforeAnyId]] while empty. */
-  def maxId: Long = span.fold(ChangeLogStream.BeforeAnyId)(_._2)
+  /** (first, last) `event_id` of the log: the first id still held
+    * (`floor + 1` once every held id is dropped) and the last id
+    * appended; `None` before the first append. */
+  def span: Option[(Long, Long)] = synchronized {
+    if (last == ChangeLogStream.BeforeAnyId) None
+    else Some((events.headOption.fold(dropped + 1)(_.eventId), last))
+  }
 
-  /** Half-open (min, max] slice, optionally filtered to table set, in
-    * O(log n + k) for k events in the range: a binary search finds the
-    * first id above `range.min`, then the walk stops past `range.max`.
-    * Both rely on the monotone ids that `append` requires, and keep
-    * the lock a partition reader shares with the producer short. */
+  /** Last `event_id` appended, or [[ChangeLogStream.BeforeAnyId]]
+    * before the first append. */
+  def maxId: Long = synchronized(last)
+
+  /** The highest id dropped, or [[ChangeLogStream.BeforeAnyId]] while
+    * none is. */
+  def floor: Long = synchronized(dropped)
+
+  /** Register a reader. Its mark starts at the floor, so nothing more
+    * is dropped until it commits or closes. */
+  def register(): ChangeLog.Hold = synchronized {
+    val m = new Mark(dropped)
+    marks += m
+    m
+  }
+
+  /** Drop every id at or below the lowest registered mark, in
+    * O(dropped ids). With no reader registered nothing is dropped: a
+    * reader yet to come may start at the earliest id. */
+  private def trim(): Unit = if (marks.nonEmpty) {
+    val upTo = marks.iterator.map(_.upTo).min
+    if (upTo > dropped) {
+      events.remove(0, firstAbove(upTo))
+      dropped = upTo
+    }
+  }
+
+  /** Index of the first held event whose id exceeds `id`. */
+  private def firstAbove(id: Long): Int = {
+    var lo = 0
+    var hi = events.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (events(mid).eventId <= id) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Half-open (min, max] slice of the held events, optionally filtered
+    * to table set, in O(log n + k) for k events in the range: a binary
+    * search finds the first id above `range.min`, then the walk stops
+    * past `range.max`. Both rely on the monotone ids that `append`
+    * requires, and keep the lock a partition reader shares with the
+    * producer short. A range below the floor yields only what is held. */
   def slice(range: OffsetRange, tables: Option[Set[String]]): Seq[ChangeEvent] =
     synchronized {
-      var lo = 0
-      var hi = events.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (events(mid).eventId <= range.min) lo = mid + 1 else hi = mid
-      }
-      events.view.drop(lo)
+      events.view.drop(firstAbove(range.min))
         .takeWhile(_.eventId <= range.max)
         .filter(e => tables.forall(_.contains(e.eventType)))
         .toVector
@@ -147,16 +212,44 @@ final case class ChangeLogOffset(maxId: Long) extends Offset {
 
 /**
  * The storage under [[ChangeLogMicroBatchStream]]'s one offset
- * contract: where the log's ids span, and which input partitions read
- * a batch's `(min, max]` sub-ranges.
+ * contract: where the log's ids span, what it has dropped, which input
+ * partitions read a batch's `(min, max]` sub-ranges, and how a reader
+ * tells it what it no longer needs.
  */
 trait ChangeLog {
-  /** (first, last) `event_id` in the log; `None` while it is empty. */
+  /** (first, last) `event_id` in the log: the first id it still holds
+    * (past `last` once it holds none) and the last id it was given;
+    * `None` before the first event. */
   def span: Option[(Long, Long)]
+
+  /** The highest id the log has dropped, or
+    * [[ChangeLogStream.BeforeAnyId]]: a reader at an offset below it has
+    * lost `(offset, floor]`. */
+  def floor: Long
 
   /** Input partitions that together read exactly `ranges`. */
   def partitions(ranges: Seq[OffsetRange],
                  tables: Option[Set[String]]): Seq[InputPartition]
+
+  /** Register one reader: the log keeps every id above the reader's
+    * mark until the reader commits past it or closes. */
+  def register(): ChangeLog.Hold
+}
+
+object ChangeLog {
+  /** A registered reader's hold on its log. */
+  trait Hold {
+    /** The reader needs no id at or below `end` any more. */
+    def commit(end: Long): Unit
+    /** The reader is gone; it holds nothing. */
+    def close(): Unit
+  }
+
+  /** The hold of a log that drops nothing. */
+  object NoHold extends Hold {
+    override def commit(end: Long): Unit = ()
+    override def close(): Unit = ()
+  }
 }
 
 /** A change-log partition builds its own reader, so one factory serves
@@ -201,6 +294,9 @@ class ChangeLogScanBuilder(options: CaseInsensitiveStringMap)
   private val tables: Option[Set[String]] =
     Option(options.get("tables")).map(_.split(",").map(_.trim).toSet)
   private val startAt = options.getOrDefault("startAt", "earliest")
+  // anything else, `Latest` or a typo, would silently replay the log
+  require(startAt == "earliest" || startAt == "latest",
+    s"option startAt must be earliest or latest, not $startAt")
 
   override def build(): Scan = this
   override def readSchema(): StructType = ChangeLogStream.Schema
@@ -216,6 +312,9 @@ class ChangeLogMicroBatchStream(log: ChangeLog, numPartitions: Int,
                                 tables: Option[Set[String]],
                                 startAt: String = "earliest")
     extends MicroBatchStream with SupportsAdmissionControl {
+
+  // registered as Spark creates the stream, released by `stop`
+  private val hold = log.register()
 
   override def initialOffset(): Offset = ChangeLogOffset(log.span match {
     case None => ChangeLogStream.BeforeAnyId
@@ -236,6 +335,7 @@ class ChangeLogMicroBatchStream(log: ChangeLog, numPartitions: Int,
     * `start`, so an empty log stays where it started. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startId = start.asInstanceOf[ChangeLogOffset].maxId
+    requireHeld(startId)
     val live = log.span.fold(startId)(_._2)
     val cap = limit match {
       case r: ReadMaxRows => r.maxRows()
@@ -250,6 +350,7 @@ class ChangeLogMicroBatchStream(log: ChangeLog, numPartitions: Int,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[ChangeLogOffset].maxId
     val hi = end.asInstanceOf[ChangeLogOffset].maxId
+    requireHeld(lo)
     if (hi <= lo) Array.empty
     else log.partitions(splitRange(OffsetRange(lo, hi), numPartitions), tables)
       .toArray
@@ -261,9 +362,19 @@ class ChangeLogMicroBatchStream(log: ChangeLog, numPartitions: Int,
   override def deserializeOffset(json: String): Offset =
     ChangeLogOffset(json.trim.toLong)
 
-  override def commit(end: Offset): Unit = () // offsets live in the checkpoint
+  /** A batch that starts below the log's floor would read a hole. */
+  private def requireHeld(startId: Long): Unit = {
+    val floor = log.floor
+    if (startId < floor) throw new IllegalStateException(
+      s"change-log ids ($startId, $floor] were dropped before this stream " +
+        "committed them; restart from a newer checkpoint or a fresh one")
+  }
 
-  override def stop(): Unit = ()
+  /** Spark has durably moved past `end`: the log may drop ids up to it. */
+  override def commit(end: Offset): Unit =
+    hold.commit(end.asInstanceOf[ChangeLogOffset].maxId)
+
+  override def stop(): Unit = hold.close()
 }
 
 class ChangeLogReaderFactory extends PartitionReaderFactory {
@@ -274,6 +385,8 @@ class ChangeLogReaderFactory extends PartitionReaderFactory {
 /** The in-process backend: one [[ChangeLogBuffer.slice]] per sub-range. */
 final class BufferLog(name: String) extends ChangeLog {
   override def span: Option[(Long, Long)] = ChangeLogBuffers.get(name).span
+  override def floor: Long = ChangeLogBuffers.get(name).floor
+  override def register(): ChangeLog.Hold = ChangeLogBuffers.get(name).register()
   override def partitions(ranges: Seq[OffsetRange],
                           tables: Option[Set[String]]): Seq[InputPartition] =
     ranges.map(r => BufferPartition(name, r.min, r.max, tables))

@@ -116,6 +116,11 @@ final class SegmentLog(dir: String) extends ChangeLog {
     else Some((segs.map(_.minId).min, segs.map(_.maxId).max))
   }
 
+  // Drops nothing yet: evicting a committed segment's footer would only
+  // make the next listing read it again until seen segments are tracked.
+  override def floor: Long = ChangeLogStream.BeforeAnyId
+  override def register(): ChangeLog.Hold = ChangeLog.NoHold
+
   override def partitions(ranges: Seq[OffsetRange],
                           tables: Option[Set[String]]): Seq[InputPartition] = {
     val segs = segments()

@@ -91,11 +91,13 @@ abstract class ChangeLogContract extends SparkSpec {
 
   test("a cap or partition count below 1 fails the query, naming the option") {
     // a cap of 0 would stall the stream silently; 0 partitions would
-    // fail with a bare "requirement failed" at the first batch
+    // fail with a bare "requirement failed" at the first batch; an
+    // unknown startAt (its case differs, or a typo) would replay the log
     val log = newLog()
     log.append((1L to 10L).map(ev(_)))
-    for (opt <- Seq("maxEventsPerTrigger", "numPartitions"))
-      inMemory(read(log, opt -> 0)) { (_, q) =>
+    for ((opt, bad) <- Seq("maxEventsPerTrigger" -> 0, "numPartitions" -> 0,
+        "startAt" -> "Latest"))
+      inMemory(read(log, opt -> bad)) { (_, q) =>
         val e = intercept[StreamingQueryException](q.awaitTermination(60000L))
         assert(e.getCause.isInstanceOf[IllegalArgumentException], e)
         assert(e.getCause.getMessage.contains(opt), e.getCause.getMessage)
